@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, RefFixtures}
 
 /** The serving-path local folds: Sort/Limit over a LocalRelation complete
   * at optimization time, with semantics identical to the distributed
@@ -124,9 +124,10 @@ class LocalFoldSpec extends AnyFunSuite {
   }
 
   test("the engine re-pins small tables locally; use_memory_table=false opts out") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv"))
     import graft.server.Engine
     import graft.sources.TableSource
-    val csv = "/root/reference/test_data/uk_cities_with_headers.csv"
+    val csv = RefFixtures.path("uk_cities_with_headers.csv")
     val e = new Engine(spark, readOnly = true)
     e.registerTable(TableSource("lf_cities", csv))
     val plan = e.querySql(
@@ -148,9 +149,10 @@ class LocalFoldSpec extends AnyFunSuite {
   }
 
   test("REST in/like filters fold job-free on pinned tables (literal commas)") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv"))
     import graft.server.Engine
     import graft.sources.TableSource
-    val csv = "/root/reference/test_data/uk_cities_with_headers.csv"
+    val csv = RefFixtures.path("uk_cities_with_headers.csv")
     val e = new Engine(spark, readOnly = true)
     e.registerTable(TableSource("lf_inlike", csv))
     // quoted in-list values carry LITERAL commas through the comma-separated

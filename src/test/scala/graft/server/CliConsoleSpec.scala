@@ -4,7 +4,7 @@ import java.io.{BufferedReader, ByteArrayOutputStream, PrintStream, StringReader
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, RefFixtures}
 import graft.sources.TableSource
 
 /** Interactive console parity (reference: columnq-cli/src/main.rs:46-99):
@@ -15,8 +15,9 @@ class CliConsoleSpec extends AnyFunSuite {
 
   private def engine = {
     val e = new Engine(spark, readOnly = true)
-    e.registerTable(TableSource("uk",
-      "/root/reference/test_data/uk_cities_with_headers.csv"))
+    if (RefFixtures.present("uk_cities_with_headers.csv"))
+      e.registerTable(TableSource("uk",
+        RefFixtures.path("uk_cities_with_headers.csv")))
     e
   }
 
@@ -28,6 +29,7 @@ class CliConsoleSpec extends AnyFunSuite {
   }
 
   test("binary output formats write the real bytes (reference -o parquet/arrow/arrows)") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv"))
     def bytesOf(fmt: String): Array[Byte] = {
       val out = new ByteArrayOutputStream()
       CliMain.renderDf(engine.querySql("SELECT city FROM uk ORDER BY city LIMIT 2"),
@@ -43,6 +45,7 @@ class CliConsoleSpec extends AnyFunSuite {
   }
 
   test("two queries through stdin, then quit") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv"))
     val out = drive(
       """SELECT count(*) AS n FROM uk
         |SELECT city FROM uk ORDER BY lat DESC LIMIT 1
@@ -55,6 +58,7 @@ class CliConsoleSpec extends AnyFunSuite {
   }
 
   test("a bad query prints Error and the session continues") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv"))
     val out = drive(
       """SELECT nope FROM missing_table
         |SELECT count(*) AS n FROM uk

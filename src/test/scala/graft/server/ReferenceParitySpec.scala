@@ -4,27 +4,29 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.SparkSpec
+import graft.{RefFixtures, SparkSpec}
 import graft.sources.TableSource
 
 /** Golden-output parity against the reference's own API tests, on the
-  * reference's own fixtures (roapi/tests/api_test.rs; fixtures under
-  * /root/reference/test_data are data, read-only). The expected JSON bodies
-  * below are the exact goldens those tests pin. */
+  * reference's own fixtures (roapi/tests/api_test.rs; fixtures in
+  * [[graft.RefFixtures]] are data, read-only). The expected JSON bodies
+  * below are the exact goldens those tests pin; a test is canceled where
+  * the fixture it reads is absent. */
 class ReferenceParitySpec extends SparkSpec {
-
-  private val testData = "/root/reference/test_data"
 
   private lazy val engine = {
     val e = new Engine(spark, readOnly = true)
-    e.registerTable(TableSource("uk_cities", s"$testData/uk_cities_with_headers.csv"))
+    if (RefFixtures.present("uk_cities_with_headers.csv"))
+      e.registerTable(TableSource("uk_cities",
+        RefFixtures.path("uk_cities_with_headers.csv")))
     val amiSchema = TableSource.parseSchema(Seq(
       ("zone", "STRING", true), ("name", "STRING", true), ("version", "STRING", true),
       ("arch", "STRING", true), ("instance_type", "STRING", true),
       ("release", "STRING", true), ("ami_id", "STRING", true), ("aki_id", "STRING", true)))
-    e.registerTable(TableSource("ubuntu_ami", s"$testData/ubuntu-ami.json",
-      Some("json"), pointer = Some("/aaData"), arrayEncoded = true,
-      schema = Some(amiSchema)))
+    if (RefFixtures.present("ubuntu-ami.json"))
+      e.registerTable(TableSource("ubuntu_ami", RefFixtures.path("ubuntu-ami.json"),
+        Some("json"), pointer = Some("/aaData"), arrayEncoded = true,
+        schema = Some(amiSchema)))
     e
   }
   private lazy val app = new HttpApp(engine, 0).start()
@@ -41,8 +43,9 @@ class ReferenceParitySpec extends SparkSpec {
 
   // golden: roapi/tests/api_test.rs test_kvstore_get (spacex_launch_name)
   test("spacex kvstore lookup matches the reference golden value") {
+    assume(RefFixtures.present("spacex_launches.json"))
     engine.registerKv("spacex_launch_name",
-      TableSource("spacex_launches", s"$testData/spacex_launches.json", Some("json")),
+      TableSource("spacex_launches", RefFixtures.path("spacex_launches.json"), Some("json")),
       keyCol = "id", valueCol = "name")
     assert(get("/api/kv/spacex_launch_name/600f9a8d8f798e2a4d5f979e")
       == "Starlink-21 (v1.0)")
@@ -50,8 +53,9 @@ class ReferenceParitySpec extends SparkSpec {
 
   // golden: roapi/tests/api_test.rs test_schema (spacex table present)
   test("schema endpoint lists a registered json table like the reference") {
+    assume(RefFixtures.present("spacex_launches.json"))
     engine.registerTable(TableSource("spacex_launches",
-      s"$testData/spacex_launches.json", Some("json")))
+      RefFixtures.path("spacex_launches.json"), Some("json")))
     val body = get("/api/schema")
     assert(body.contains("\"spacex_launches\""))
     assert(body.contains("\"name\""))
@@ -59,6 +63,7 @@ class ReferenceParitySpec extends SparkSpec {
 
   // golden: roapi/tests/api_test.rs test_uk_cities_sql_post
   test("uk_cities SQL filter matches the reference golden body") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv"))
     val got = post("/api/sql",
       "SELECT city FROM uk_cities WHERE lat > 52 and lat < 53 and lng < -1")
     assert(got ==
@@ -67,6 +72,7 @@ class ReferenceParitySpec extends SparkSpec {
 
   // golden: roapi/tests/api_test.rs test_rest_get (ubuntu_ami REST params)
   test("ubuntu_ami REST query matches the reference golden body") {
+    assume(RefFixtures.present("ubuntu-ami.json"))
     val got = get("/api/tables/ubuntu_ami?" +
       "columns=name,version,release&" +
       "filter%5Barch%5D='amd64'&" +
@@ -79,6 +85,7 @@ class ReferenceParitySpec extends SparkSpec {
 
   // golden: roapi/tests/api_test.rs test_graphql_post_query_op
   test("ubuntu_ami GraphQL query matches the reference golden body") {
+    assume(RefFixtures.present("ubuntu-ami.json"))
     val got = post("/api/graphql",
       """query {
         |  ubuntu_ami(

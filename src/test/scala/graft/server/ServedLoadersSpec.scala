@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import graft.SparkSpec
+import graft.{RefFixtures, SparkSpec}
 import graft.sources.TableSource
 
 /** Golden end-to-end: tables from the round-2 loaders (Google-Sheets-mocked,
@@ -37,8 +37,9 @@ class ServedLoadersSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     e.registerTable(TableSource("cities",
       "https://docs.google.com/spreadsheets/d/SHEETX", format = Some("gsheet"),
       options = Map("api_base" -> mockBase, "auth_token" -> "tok")))
-    e.registerTable(TableSource("blogs",
-      "/root/reference/test_data/blogs-delta", format = Some("delta")))
+    if (RefFixtures.present("blogs-delta/_delta_log"))
+      e.registerTable(TableSource("blogs",
+        RefFixtures.path("blogs-delta"), format = Some("delta")))
     e.registerKv("city_pop",
       TableSource("cities_kv", "https://docs.google.com/spreadsheets/d/SHEETX",
         format = Some("gsheet"),
@@ -88,6 +89,7 @@ class ServedLoadersSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
   }
 
   test("delta-backed table served via /api/tables and /api/sql") {
+    assume(RefFixtures.present("blogs-delta/_delta_log"))
     // reply_id has 245 nulls in the fixture; a gt filter prunes them so the
     // golden shape is two concrete ids
     val r = get("/api/tables/blogs?filter[reply_id]gt=0&sort=reply_id&limit=2&columns=reply_id")

@@ -7,7 +7,7 @@ import org.apache.arrow.vector.ipc.message.MessageSerializer
 
 import org.apache.spark.sql.GraftArrowBridge
 
-import graft.SparkSpec
+import graft.{RefFixtures, SparkSpec}
 import graft.server.Engine
 import graft.sources.TableSource
 import FlightProto._
@@ -19,14 +19,16 @@ import FlightProto._
   * the offline classpath. */
 class FlightSqlSpec extends SparkSpec {
 
-  private val testData = "/root/reference/test_data"
   private val FlightPath = "/arrow.flight.protocol.FlightService/"
 
   private lazy val engine = {
     val e = new Engine(spark, readOnly = true)
-    e.registerTable(TableSource("uk_cities", s"$testData/uk_cities_with_headers.csv"))
-    e.registerTable(TableSource("spacex_launches",
-      s"$testData/spacex_launches.json", Some("json")))
+    if (RefFixtures.present("uk_cities_with_headers.csv"))
+      e.registerTable(TableSource("uk_cities",
+        RefFixtures.path("uk_cities_with_headers.csv")))
+    if (RefFixtures.present("spacex_launches.json"))
+      e.registerTable(TableSource("spacex_launches",
+        RefFixtures.path("spacex_launches.json"), Some("json")))
     e
   }
   private lazy val server = new FlightSqlServer(engine, 0).start()
@@ -64,6 +66,7 @@ class FlightSqlSpec extends SparkSpec {
   // golden: roapi/tests/flight_sql_test.rs:68-100 (spacex aggregate through
   // the prepared-statement flow)
   test("prepared statement executes the golden spacex aggregate") {
+    assume(RefFixtures.present("spacex_launches.json"))
     val query = """SELECT COUNT(*), rocket as launch_cnt
                   |FROM spacex_launches
                   |GROUP BY rocket
@@ -101,6 +104,7 @@ class FlightSqlSpec extends SparkSpec {
   }
 
   test("ad-hoc statement executes once per ticket (pop semantics)") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv"))
     val desc = FlightDescriptor.cmd(AnyMsg(CommandStatementQuery.Url,
       CommandStatementQuery("SELECT city FROM uk_cities ORDER BY city LIMIT 2").encode).encode)
     val info = FlightInfo.parse(callOk("GetFlightInfo", desc.encode).head)
@@ -136,6 +140,7 @@ class FlightSqlSpec extends SparkSpec {
   // golden: roapi/tests/flight_sql_test.rs:122-220 (get_tables, all four
   // variants: no schema, with schema, name filter, non-matching filter)
   test("get_tables matches the reference surface") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv", "spacex_launches.json"))
     // without schemas: first requested type labels the rows
     val noSchema = dfOf(callOk("GetFlightInfo",
       FlightDescriptor.cmd(AnyMsg(CommandGetTables.Url,
@@ -185,8 +190,9 @@ class FlightSqlSpec extends SparkSpec {
   }
 
   test("basic-auth handshake issues a bearer token the other calls require") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv"))
     val e2 = new Engine(spark, readOnly = true)
-    e2.registerTable(TableSource("uk_cities", s"$testData/uk_cities_with_headers.csv"))
+    e2.registerTable(TableSource("uk_cities", RefFixtures.path("uk_cities_with_headers.csv")))
     val authed = new FlightSqlServer(e2, 0,
       authBasic = Some(("flight_user", "flight_password"))).start()
     val c2 = new GrpcTestClient("127.0.0.1", authed.boundPort)
@@ -335,6 +341,7 @@ class FlightSqlSpec extends SparkSpec {
   }
 
   test("GetSchema answers without executing; unknown methods are UNIMPLEMENTED") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv"))
     val sr = callOk("GetSchema", FlightDescriptor.cmd(AnyMsg(CommandStatementQuery.Url,
       CommandStatementQuery("SELECT lat, lng FROM uk_cities").encode).encode).encode)
     // SchemaResult { bytes schema = 1 }

@@ -2,7 +2,7 @@ package graft.server.flight
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
+import graft.{RefFixtures, SparkSpec}
 import graft.server.{Config, Engine}
 import graft.sources.TableSource
 import FlightProto._
@@ -49,8 +49,9 @@ class FlightTlsSpec extends SparkSpec {
 
   private lazy val engine = {
     val e = new Engine(spark, readOnly = true)
-    e.registerTable(TableSource("tls_cities",
-      "/root/reference/test_data/uk_cities_with_headers.csv"))
+    if (RefFixtures.present("uk_cities_with_headers.csv"))
+      e.registerTable(TableSource("tls_cities",
+        RefFixtures.path("uk_cities_with_headers.csv")))
     e
   }
   private lazy val server = new FlightSqlServer(engine, 0,
@@ -58,6 +59,7 @@ class FlightTlsSpec extends SparkSpec {
       s"$certDir/server.pem", s"$certDir/server.key", s"$certDir/ca.pem"))).start()
 
   test("mutual TLS: a cert-bearing client queries end-to-end over ALPN h2") {
+    assume(RefFixtures.present("uk_cities_with_headers.csv"))
     val c = new GrpcTestClient("127.0.0.1", server.boundPort,
       tls = Some(GrpcTestClient.Tls(s"$certDir/ca.pem",
         Some((s"$certDir/client.pem", s"$certDir/client.key")))))

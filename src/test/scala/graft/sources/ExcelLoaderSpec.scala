@@ -3,17 +3,18 @@ package graft.sources
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, RefFixtures}
 
 /** Behavior parity with the reference's calamine-based loader
   * (reference: columnq/src/table/excel.rs:433-725 tests). */
 class ExcelLoaderSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.get()
-  private val xlsx = "/root/reference/test_data/uk_cities_with_headers.xlsx"
-  private val ods = "/root/reference/test_data/excel_range.ods"
+  private val xlsx = RefFixtures.path("uk_cities_with_headers.xlsx")
+  private val ods = RefFixtures.path("excel_range.ods")
 
   test("xlsx: uk_cities loads 37 rows with inferred city/lat/lng schema") {
+    assume(RefFixtures.present("uk_cities_with_headers.xlsx"))
     // mirrors load_xlsx_with_yaml_config (excel.rs:666-691): 37 rows
     val df = Loaders.load(spark, TableSource("uk", xlsx,
       options = Map("sheet_name" -> "uk_cities_with_headers")))
@@ -25,15 +26,17 @@ class ExcelLoaderSpec extends AnyFunSuite {
   }
 
   test("xlsx: values match the CSV fixture of the same table") {
+    assume(RefFixtures.present("uk_cities_with_headers.xlsx", "uk_cities_with_headers.csv"))
     val xdf = Loaders.load(spark, TableSource("uk", xlsx))
     val cdf = Loaders.load(spark,
-      TableSource("uk_csv", "/root/reference/test_data/uk_cities_with_headers.csv"))
+      TableSource("uk_csv", RefFixtures.path("uk_cities_with_headers.csv")))
       .toDF("city", "lat", "lng")
     assert(xdf.exceptAll(cdf).count() === 0)
     assert(cdf.exceptAll(xdf).count() === 0)
   }
 
   test("xlsx: unknown sheet name errors with available sheets listed") {
+    assume(RefFixtures.present("uk_cities_with_headers.xlsx"))
     val e = intercept[IllegalArgumentException] {
       Loaders.load(spark, TableSource("uk", xlsx, options = Map("sheet_name" -> "nope")))
     }
@@ -41,6 +44,7 @@ class ExcelLoaderSpec extends AnyFunSuite {
   }
 
   test("ods: custom range without sheet name — 6 columns, 3 rows") {
+    assume(RefFixtures.present("excel_range.ods"))
     // mirrors load_ods_with_custom_range_and_without_sheet_name
     // (excel.rs:690-720): rows 2..5, cols 1..6, 3 inference lines
     val df = Loaders.load(spark, TableSource("rng", ods, options = Map(
@@ -90,6 +94,7 @@ class ExcelLoaderSpec extends AnyFunSuite {
   }
 
   test("golden HTTP query over the xlsx table (reference api_test.rs:43-66)") {
+    assume(RefFixtures.present("uk_cities_with_headers.xlsx"))
     val engine = new graft.server.Engine(spark, readOnly = true)
     engine.registerTable(TableSource("uk_cities", xlsx))
     val app = new graft.server.HttpApp(engine, 0).start()
@@ -111,6 +116,7 @@ class ExcelLoaderSpec extends AnyFunSuite {
   }
 
   test("declared schema overrides inference and casts integral floats") {
+    assume(RefFixtures.present("uk_cities_with_headers.xlsx"))
     val schema = StructType(Seq(
       StructField("city", StringType, nullable = true),
       StructField("lat", DoubleType, nullable = true),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.col
 
-import graft.SparkSpec
+import graft.{RefFixtures, SparkSpec}
 
 /** Plan-level proof that hive-partitioned listing tables prune: the reference
   * pins this behavior in roapi/tests/partitioned_table_test.rs:56-78 (a
@@ -15,7 +15,7 @@ import graft.SparkSpec
 class PartitionPruningSpec extends SparkSpec {
 
   private lazy val table = Loaders.load(spark, TableSource("pp_csv",
-    "/root/reference/test_data/partitioned_csv", format = Some("csv")))
+    RefFixtures.path("partitioned_csv"), format = Some("csv")))
 
   /** Execute and dig the file scan out of the (possibly adaptive) plan. */
   private def executedScan(df: DataFrame): FileSourceScanExec = {
@@ -31,11 +31,13 @@ class PartitionPruningSpec extends SparkSpec {
   }
 
   test("unfiltered scan reads every partition file") {
+    assume(RefFixtures.present("partitioned_csv"))
     val scan = executedScan(table)
     assert(scan.metrics("numFiles").value === 2)
   }
 
   test("a year= predicate becomes a PartitionFilter and halves the files read") {
+    assume(RefFixtures.present("partitioned_csv"))
     val scan = executedScan(table.filter(col("year") === 2023))
     assert(scan.partitionFilters.nonEmpty,
       "partition predicate must reach the scan as a PartitionFilter, not a data Filter")
@@ -45,14 +47,16 @@ class PartitionPruningSpec extends SparkSpec {
   }
 
   test("year+month predicates prune through nested partition dirs") {
+    assume(RefFixtures.present("partitioned_csv"))
     val scan = executedScan(table.filter(col("year") === 2022 && col("month") === 12))
     assert(scan.partitionFilters.nonEmpty)
     assert(scan.metrics("numFiles").value === 1)
   }
 
   test("pruning holds through the SQL/serving route (temp view)") {
+    assume(RefFixtures.present("partitioned_csv"))
     Loaders.register(spark, TableSource("pp_csv_view",
-      "/root/reference/test_data/partitioned_csv", format = Some("csv")))
+      RefFixtures.path("partitioned_csv"), format = Some("csv")))
     val scan = executedScan(
       spark.sql("SELECT * FROM pp_csv_view WHERE year = 2023"))
     assert(scan.partitionFilters.nonEmpty)
