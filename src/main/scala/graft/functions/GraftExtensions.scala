@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.execution.ColumnarRule
 
 /** Registers the engine's native expressions as SQL functions via the
   * sanctioned extension point (`SparkSessionExtensions.injectFunction`), so
@@ -82,5 +83,10 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.LocalFoldRules.FoldLocalLimit)
     ext.injectOptimizerRule(_ => graft.plans.LocalFoldRules.FoldLocalAggregate)
     ext.injectOptimizerRule(_ => graft.plans.IndexPruneRule)
+    // ad-hoc serving compiles each query shape once: filter/projection
+    // literals ride in the generated class's references (HoistLiterals scaladoc)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions = graft.plans.HoistLiterals
+    })
   }
 }

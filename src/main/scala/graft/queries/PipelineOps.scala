@@ -3231,9 +3231,7 @@ object PipelineOps {
     // groupBy), so the left join cannot fan out and `marker IS NULL` is
     // exactly the anti-join's row set; the mixture keep-condition is the
     // same deterministic-hash expression mixtureSample filters on.
-    val mixKeep = shiftrightunsigned(fnvMix64(
-        concat(lit("mix-42-"), col("doc_id").cast("string"))), 11) <
-      mixtureThreshold(mixRates, defaultRate, "source")
+    val mixKeep = mixtureKeep(h, mixRates, defaultRate, "source")
     val funnel = d.agg(count(lit(1)).as("n_input"),
         count(when(tokenCount(col("text")) >= minTokens, lit(1))).as("n_quality"))
       .crossJoin(deduped
@@ -3472,18 +3470,18 @@ object PipelineOps {
     * every row (threshold 2^53 exceeds any 53-bit hash). */
   def mixtureSample(d: DataFrame, rates: Map[String, Double], defaultRate: Double,
                     sourceCol: String, hashCol: String): DataFrame =
-    d.filter(shiftrightunsigned(col(hashCol), 11) <
-      mixtureThreshold(rates, defaultRate, sourceCol))
+    d.filter(mixtureKeep(col(hashCol), rates, defaultRate, sourceCol))
 
-  /** The per-source keep threshold expression [[mixtureSample]] filters on —
-    * factored out so the curation funnel's one-pass counts apply the SAME
-    * expression tree (bit-identical keep decisions by construction). */
-  private def mixtureThreshold(rates: Map[String, Double], defaultRate: Double,
-                               sourceCol: String): Column =
-    rates.foldLeft(lit(hashSampleThreshold(defaultRate))) {
-      case (acc, (s, r)) =>
-        when(col(sourceCol) === s, lit(hashSampleThreshold(r))).otherwise(acc)
-    }
+  /** The keep condition [[mixtureSample]] filters on — factored out so the
+    * curation funnel's one-pass counts apply the SAME expression tree over
+    * the same hash (bit-identical keep decisions by construction). */
+  private def mixtureKeep(hash: Column, rates: Map[String, Double], defaultRate: Double,
+                          sourceCol: String): Column =
+    shiftrightunsigned(hash, 11) <
+      rates.foldLeft(lit(hashSampleThreshold(defaultRate))) {
+        case (acc, (s, r)) =>
+          when(col(sourceCol) === s, lit(hashSampleThreshold(r))).otherwise(acc)
+      }
 
   /** Exact n-gram Jaccard similarity join over (doc_id, sh: array<string>).
     *

@@ -467,10 +467,30 @@ final class Engine(val spark: SparkSession, val readOnly: Boolean = true,
   // cache — staleness is impossible, the worst case is a re-analysis.
   private val planCacheSize = 128
   private val planCache =
-    new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean =
+    new java.util.LinkedHashMap[String, CachedPlan](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, CachedPlan]): Boolean =
         size > planCacheSize
     }
+
+  /** A plan-cache entry. A folded or pinned statement (every leaf, subquery
+    * plans included, a driver-local relation) is served as the same
+    * DataFrame on every hit. A distributed one keeps only its analyzed plan
+    * and each hit gets a fresh, unexecuted DataFrame over it: an executed
+    * DataFrame holds its AQE stages, shuffle dependencies and broadcast
+    * relations, which a full cache of ad-hoc statements would keep alive. */
+  private final case class CachedPlan(
+      analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      shared: Option[DataFrame]) {
+    def serve(): DataFrame =
+      shared.getOrElse(org.apache.spark.sql.GraftPlanBridge.ofRows(spark, analyzed))
+  }
+  private def cachedPlan(df: DataFrame): CachedPlan = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, OneRowRelation}
+    val analyzed = df.queryExecution.analyzed
+    val local = analyzed.collectWithSubqueries { case l: LeafNode => l }
+      .forall(l => l.isInstanceOf[LocalRelation] || l.isInstanceOf[OneRowRelation])
+    CachedPlan(analyzed, Some(df).filter(_ => local))
+  }
   /** Spec hook: how many querySql calls reused a cached plan. */
   private[server] val planCacheHits = new java.util.concurrent.atomic.AtomicLong(0)
   // epoch fences the analyze-outside-the-lock window: a DDL/registry clear
@@ -574,14 +594,17 @@ final class Engine(val spark: SparkSession, val readOnly: Boolean = true,
       spark.sql(rewritten)
     } else {
       val hit = planCache.synchronized(planCache.get(sql))
-      if (hit != null) { planCacheHits.incrementAndGet(); hit }
+      if (hit != null) { planCacheHits.incrementAndGet(); hit.serve() }
       else {
         val epoch = planEpoch.get()
         val df0 = spark.sql(sql) // analyze outside the lock (it can be slow)
         val cacheable = cacheablePlan(df0)
         val df = fastLocalServe(df0)
-        if (cacheable) planCache.synchronized {
-          if (planEpoch.get() == epoch) planCache.put(sql, df)
+        if (cacheable) {
+          val entry = cachedPlan(df)
+          planCache.synchronized {
+            if (planEpoch.get() == epoch) planCache.put(sql, entry)
+          }
         }
         df
       }

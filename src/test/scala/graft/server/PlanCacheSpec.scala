@@ -27,6 +27,33 @@ class PlanCacheSpec extends SparkSpec {
     assert(df2.collect().map(_.getString(0)).sorted.length === 5)
   }
 
+  test("repeated distributed SQL hits the cache with a fresh, unexecuted DataFrame") {
+    val e = newEngine()
+    e.registerTable(TableSource("pc_nation_dist", s"$sf0001/nation.parquet",
+      Some("parquet"), memTable = Some(false)))
+    val want = spark.read.parquet(s"$sf0001/nation.parquet").collect().toSeq
+      .groupBy(_.getAs[Number]("n_regionkey").longValue)
+      .map { case (k, rs) => (k, rs.size.toLong) }.toSeq.sorted
+    val sql = "SELECT n_regionkey, count(*) AS n FROM pc_nation_dist " +
+      "GROUP BY n_regionkey ORDER BY n_regionkey"
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(r => (r.getAs[Number](0).longValue, r.getLong(1)))
+    val h0 = e.planCacheHits.get()
+    val df1 = e.querySql(sql)
+    assert(rows(df1) === want)
+    val df2 = e.querySql(sql)
+    val df3 = e.querySql(sql)
+    assert(e.planCacheHits.get() === h0 + 2)
+    assert(!(df2 eq df1) && !(df3 eq df2), "a distributed hit must not hand out an executed plan")
+    // the hit reuses the analysis, not the execution
+    assert(df2.queryExecution.analyzed eq df1.queryExecution.analyzed)
+    assert(rows(df2) === want && rows(df3) === want)
+    // a pinned (re-pinned small table) or folded statement stays one instance
+    val pinned = "SELECT n_name FROM pc_nation WHERE n_regionkey = 1"
+    assert(e.querySql(pinned) eq e.querySql(pinned))
+    assert(e.querySql("SELECT 7 AS k") eq e.querySql("SELECT 7 AS k"))
+  }
+
   test("registry changes invalidate the cache (no stale view resolution)") {
     val e = newEngine(readOnly = false)
     val sql = "SELECT count(*) AS n FROM pc_tmp"
