@@ -73,7 +73,8 @@ object Bench {
     // machine shape than the baseline's (rounds 2-5 ran the driver's bench
     // at 4 threads while quiet-box records set 32 explicitly; that, not box
     // load, was most of the recorded 2x run-to-run "variance")
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val cpusSession = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.get(cpusSession)
     // Warm the session (codegen, shuffle machinery, footer reads) so the
     // first timed queries don't absorb one-time JVM startup costs; one
     // representative per expression family (relational / vector / shingle).
@@ -158,18 +159,8 @@ object Bench {
       "," + early +
         late.fold("")(l => "," + l.replaceFirst("^\"serving\"", "\"serving_late\""))
     }
-    val loadEnd = loadAvg()
-    // Locale.ROOT: the f-interpolator honors the JVM default locale, and a
-    // comma-decimal locale would emit invalid JSON (review finding)
-    // cpus_session: the parallelism actually passed to the session (finding 4,
-    // round-20 verdict): the driver's 8-thread scaling run produced a record
-    // claiming "cpus":32 because availableProcessors() was the only stamp —
-    // record both so scaling evidence stays readable after the fact.
-    val cpusSession = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val loadJson = String.format(java.util.Locale.ROOT,
-      ""","cpus":%d,"cpus_session":%s,"loadavg_start":%.2f,"loadavg5_start":%.2f,"loadavg_end":%.2f,"loaded":%b""",
-      Int.box(cpus), cpusSession, Double.box(loadStart), Double.box(load5Start),
-      Double.box(loadEnd), Boolean.box(loaded))
+    val loadJson = runStamp(cpus, cpusSession, loadStart, load5Start,
+      loadAvg(), loaded)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures$serving$loadJson,"sf":"$sfDir"}"""
     println(line)
     // Also persist to a file: the driver captures a bounded stdout tail, and
@@ -202,6 +193,21 @@ object Bench {
     println(trailer)
     spark.stop()
   }
+
+  /** The run-stamp fragment (leading comma, no braces) that both the full
+    * record and the trailer carry. `cpusSession` is the parallelism
+    * actually passed to the session (round-20 verdict: a record claimed
+    * "cpus":32 because availableProcessors() was the only stamp), kept as
+    * the raw SPARK_GRAFT_CPUS text — `*` (local[*]) or an empty value
+    * included — so it is written as a JSON string. Locale.ROOT: the JVM
+    * default locale may use a decimal comma, which is invalid JSON. */
+  private[graft] def runStamp(cpus: Int, cpusSession: String, loadStart: Double,
+                              load5Start: Double, loadEnd: Double,
+                              loaded: Boolean): String =
+    String.format(java.util.Locale.ROOT,
+      ""","cpus":%d,"cpus_session":%s,"loadavg_start":%.2f,"loadavg5_start":%.2f,"loadavg_end":%.2f,"loaded":%b""",
+      Int.box(cpus), jsonStr(cpusSession), Double.box(loadStart),
+      Double.box(load5Start), Double.box(loadEnd), Boolean.box(loaded))
 
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.LongType
   * reference: columnq/src/columnq.rs:36-44) but stays *lazy*: every table is a
   * plain parquet scan, so Catalyst pushes filters and prunes columns all the
   * way into the reader. That is the design that survives a 100 TB listing —
-  * materializing (the reference's `use_memory_table` default) is opt-in via
-  * [[cacheAll]] for small serving tables only.
+  * materializing (the reference's `use_memory_table` default) is left to the
+  * server's table config for small serving tables.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -78,12 +78,4 @@ object Tables {
     }
     if (fresh) all.foreach(n => t(spark, sfDir, n).createOrReplaceTempView(n))
   }
-
-  /** Reference-parity "MemTable" mode: fully materialized in memory
-    * (reference: columnq/src/table/mod.rs:291-294). Use for serving only. */
-  def cacheAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach { n =>
-      val df = t(spark, sfDir, n).cache()
-      df.createOrReplaceTempView(n)
-    }
 }

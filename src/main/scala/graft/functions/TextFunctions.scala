@@ -230,10 +230,6 @@ object TextFunctions {
     length(regexp_replace(c, "[^.!?,;:]", "")).cast("double") /
       greatest(length(c), lit(1)).cast("double")
 
-  def upperRatio(c: Column): Column =
-    length(regexp_replace(c, "[^A-Z]", "")).cast("double") /
-      greatest(length(c), lit(1)).cast("double")
-
   val defaultStopwords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "for", "on",
     "with", "as", "at", "by", "from", "that", "this", "be", "are", "was")

@@ -140,18 +140,4 @@ object ZOrder {
     }
     out
   }
-
-  /** Per-file (min, max) of a column over a written dataset — the stats a
-    * min/max-skipping scan consults. One distributed pass, grouped by
-    * file. */
-  def fileRanges(df: DataFrame, c: String): Map[String, (Long, Long)] =
-    df.groupBy(input_file_name().as("f"))
-      .agg(min(col(c)).cast("long").as("mn"), max(col(c)).cast("long").as("mx"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-
-  /** Fraction of files a [lo, hi] range predicate on `c` must read given
-    * the per-file ranges — the skipping effectiveness measure. */
-  def scanFraction(ranges: Map[String, (Long, Long)], lo: Long, hi: Long): Double =
-    if (ranges.isEmpty) 0.0
-    else ranges.values.count { case (mn, mx) => mx >= lo && mn <= hi }.toDouble / ranges.size
 }

@@ -564,9 +564,8 @@ object PipelineOps {
     // Scale shape mirrors doc_bpe_encode: the corpus is read once into the
     // token stream; the greedy walk runs per DISTINCT word (the dict, not
     // the stream); the vocab is a bounded tokenizer artifact (<=~50k
-    // entries in any real deployment), so it broadcasts as a closure the
-    // same way ivfAssignBroadcast ships its centroid matrix — an iterative
-    // longest-match has no builtin-expression form.
+    // entries in any real deployment), so it broadcasts as a closure — an
+    // iterative longest-match has no builtin-expression form.
     "doc_wordpiece_encode" -> ((spark, dir) => {
       val (_, dict) = bpeModelFor(spark, dir)
       val vocab = dict.select(explode(col("syms")).as("p")).distinct()
@@ -1289,9 +1288,9 @@ object PipelineOps {
     }),
 
     // IVF-flat ANN, serve-time path: fixed centroids (deterministic hash-
-    // ranked seeds — ivfTrain is the offline k-means alternative), corpus
-    // assigned by a shuffle-free argmin projection, probes search their
-    // nprobe nearest cells only, so the scored set shrinks by ~nprobe/k.
+    // ranked seeds), corpus assigned by a shuffle-free argmin projection,
+    // probes search their nprobe nearest cells only, so the scored set
+    // shrinks by ~nprobe/k.
     // The (k, nprobe, topK, probe-set) constants are AnnIvf* below —
     // ann_recall grades exactly this configuration, so they are shared.
     "ann_ivf" -> ((spark, dir) =>
@@ -2358,46 +2357,6 @@ object PipelineOps {
       .withColumn("shard_id", expr(s"token_offset div $budget"))
   }
 
-  /** Persist a trained BPE model as parquet artifacts — the durable half
-    * of the tokenizer lifecycle ([[ivfSave]]'s discipline): `merges/`
-    * holds the rank-ordered merge table, `dict/` the fully-merged word
-    * dictionary. Train once offline, then any number of serving sessions
-    * [[bpeLoad]] and encode without touching the training corpus. */
-  def bpeSave(spark: SparkSession,
-              model: (Seq[(String, String, Long)], DataFrame),
-              dir: String): Unit = {
-    import spark.implicits._
-    val (merges, dict) = model
-    merges.zipWithIndex
-      .map { case ((l, r, c), i) => (i + 1L, l, r, c) }
-      .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
-      .repartition(1) // tokenizer-sized table; one footer beats 32 slivers
-      .write.mode("overwrite").parquet(dir + "/merges")
-    dict.write.mode("overwrite").parquet(dir + "/dict")
-  }
-
-  /** Load a [[bpeSave]]d model. The merge table is rank-ordered (the
-    * ordering IS the model — merges apply in training order); the dict
-    * reads lazily like any parquet table. */
-  def bpeLoad(spark: SparkSession, dir: String)
-      : (Seq[(String, String, Long)], DataFrame) = {
-    val merges = spark.read.parquet(dir + "/merges").orderBy(col("merge_rank"))
-      .collect().map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    (merges, spark.read.parquet(dir + "/dict"))
-  }
-
-  /** Encode words NOT covered by the persisted dict — the serve-time OOV
-    * path: apply the learned merges in rank order with the same greedy
-    * left-to-right rule training used, as a pure HOF fold per distinct
-    * word. Input needs a `word` column; output adds `syms`. */
-  def bpeEncodeWords(words: DataFrame,
-                     merges: Seq[(String, String, Long)]): DataFrame =
-    merges.foldLeft(
-      words.withColumn("syms",
-        expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))) {
-      case (df, (l, r, _)) => df.withColumn("syms", bpeApplyMerge(col("syms"), l, r))
-    }
-
   // ===== unigram-LM (SentencePiece-style) tokenizer ========================
 
   /** Quantized log-count: `floor(3·log2(clip(c)))`, count clipped to
@@ -2545,48 +2504,6 @@ object PipelineOps {
     // the OOV Viterbi consistent by construction, not by fixture luck.
     seg = segmentUnder(unigramScores(vocab))
     (vocab, seg)
-  }
-
-  /** Persist a trained unigram model as parquet artifacts ([[bpeSave]]'s
-    * discipline): `vocab/` holds the surviving (piece, count) rows —
-    * counts ARE the model (scores derive from them) — and `seg/` the
-    * final word segmentations for dict-hit serving. */
-  def unigramSave(spark: SparkSession,
-                  model: (Seq[(String, Long)], DataFrame), dir: String): Unit = {
-    import spark.implicits._
-    val (vocab, seg) = model
-    vocab.toDF("piece", "cnt")
-      .repartition(1) // tokenizer-sized table; one footer beats 32 slivers
-      .write.mode("overwrite").parquet(dir + "/vocab")
-    seg.write.mode("overwrite").parquet(dir + "/seg")
-  }
-
-  /** Load a [[unigramSave]]d model. */
-  def unigramLoad(spark: SparkSession, dir: String)
-      : (Seq[(String, Long)], DataFrame) = {
-    val vocab = spark.read.parquet(dir + "/vocab")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-    (vocab, spark.read.parquet(dir + "/seg"))
-  }
-
-  /** Segment words NOT covered by the persisted dict — the serve-time OOV
-    * path ([[bpeEncodeWords]]'s analog): the same quantized-likelihood
-    * Viterbi training used, under the loaded vocabulary's counts. Input
-    * needs a `word` column; output adds `pieces`. A word containing a
-    * character absent from the vocabulary fails LOUDLY (the corpus-closed
-    * vocab makes that foreign serve input, not a training state). */
-  def unigramEncodeWords(words: DataFrame,
-                         vocab: Seq[(String, Long)]): DataFrame = {
-    val spark = words.sparkSession
-    // same scores the trainer's final consistency pass segmented under
-    // ([[unigramScores]] from the saved counts), so a dict word re-encodes
-    // to EXACTLY its stored segmentation — guaranteed, not fixture-lucky
-    val scores = unigramScores(vocab)
-    val bc = spark.sparkContext.broadcast(scores)
-    val segUdf = udf { (w: String) =>
-      viterbiPieces(w.take(16), bc.value)
-    }
-    words.withColumn("pieces", segUdf(col("word")))
   }
 
   private val unigramModelCache =
@@ -2950,8 +2867,7 @@ object PipelineOps {
     import spark.implicits._
     val nCells = dim * (dim + 1) / 2
     // safe to widen: long sums are order-free, the kernel is documented
-    // bit-reproducible at any partitioning (gramMatrixFast is NOT — no
-    // widen there)
+    // bit-reproducible at any partitioning
     val partials = widenIfNarrow(e.select(col("embedding"))).as[Seq[Float]]
       .mapPartitions { it =>
         val acc = new Array[Long](nCells)
@@ -2989,58 +2905,6 @@ object PipelineOps {
       .orderBy(col("i"), col("j"))
   }
 
-  /** 100 TB-path Gram matrix: identical plan shape to [[gramMatrix]] but
-    * the per-partition accumulator is Kahan-compensated double — ~1000×
-    * cheaper per term than the exact-decimal kernel, which exists only to
-    * satisfy a bit-exact oracle. Each partition emits its (sum,
-    * compensation) pair and the cross-partition aggregate merges them with
-    * two-sum ([[TwoSumMerge]]): every merge's roundoff is captured exactly
-    * into the carried compensation, so per-cell error stays O(1) ulp of the
-    * total independent of corpus size AND partition count (vs O(n) naive,
-    * O(nPartitions) if partials merged through a plain double sum). NOT
-    * order-free — use the exact kernel when bit-reproducibility across
-    * partitionings matters. */
-  def gramMatrixFast(e: DataFrame, dim: Int): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val nCells = dim * (dim + 1) / 2
-    val partials = e.select(col("embedding")).as[Seq[Float]]
-      .mapPartitions { it =>
-        val s = new Array[Double](nCells) // running sums
-        val c = new Array[Double](nCells) // Kahan compensations
-        var any = false
-        it.foreach { v =>
-          any = true
-          var i = 0
-          var k = 0
-          while (i < dim) {
-            val xi = v(i).toDouble
-            var j = i
-            while (j < dim) {
-              val y = xi * v(j).toDouble - c(k)
-              val t = s(k) + y
-              c(k) = (t - s(k)) - y
-              s(k) = t
-              k += 1
-              j += 1
-            }
-            i += 1
-          }
-        }
-        if (!any) Iterator.empty
-        // Kahan's c holds the NEGATED low-order residue: true sum = s - c
-        else Iterator.range(0, nCells).map(k => (k, s(k), -c(k)))
-      }
-      .toDF("k", "partial", "comp")
-    partials
-      .groupBy(col("k"))
-      .agg(graft.functions.TwoSumMerge(col("partial"), col("comp")).as("gram"))
-      .withColumn("i", cellRow(col("k"), dim))
-      .withColumn("j", col("k") - cellBase(col("i"), dim))
-      .select(col("i").cast("long").as("i"), col("j").cast("long").as("j"), col("gram"))
-      .orderBy(col("i"), col("j"))
-  }
-
   /** Row index of upper-triangle cell k (row-major, j >= i). */
   private def cellRow(k: Column, dim: Int): Column = {
     // i is the largest row whose base offset <= k
@@ -3060,7 +2924,7 @@ object PipelineOps {
     * PCA-style dimensionality reduction (uncentered: the Gram spectral
     * basis; center the corpus first if mean-removal matters). Runs on the
     * driver: the matrix is dim×dim (a few KB) regardless of corpus size —
-    * the same train/serve split as [[ivfTrain]]. Cyclic Jacobi with a fixed
+    * the train/serve split of [[graft.tools.PcaTrain]]. Cyclic Jacobi with a fixed
     * sweep order, so the basis is deterministic run-to-run. Returns the k
     * eigenvectors of largest eigenvalue (sign fixed: first nonzero
     * component positive). */
@@ -3425,21 +3289,6 @@ object PipelineOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Sink half of shard packing: write a packed corpus (any DataFrame
-    * carrying a `shard_id` column, e.g. `doc_pack`'s output joined back to
-    * its payload) as one parquet directory per shard (`shard_id=N/`) — the
-    * layout a training loader streams sequentially. `partitionBy` is the
-    * Spark-native dynamic-partition write (each task streams rows to its
-    * shard files, no global sort); the repartition on shard_id lands one
-    * shard wholly in one task so each directory holds ONE file — training
-    * wants few big files, not 32 slivers per shard. The within-file order
-    * is pinned by sortWithinPartitions, so a reader sees docs in pack
-    * order. */
-  def writeShards(packed: DataFrame, outDir: String): Unit =
-    packed.repartition(col("shard_id"))
-      .sortWithinPartitions(col("shard_id"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("shard_id").parquet(outDir)
-
   /** Semantic decontamination: flag every corpus vector whose cosine vs ANY
     * probe reaches `tau` — the embedding-space analog of n-gram benchmark
     * decontamination (probes = the held-out eval set's embeddings). Probes
@@ -3752,7 +3601,7 @@ object PipelineOps {
     * rejected: the 32-band split generates only ~1k candidates at sf0.1,
     * so the array_intersect cost is noise while the variant's vocab-probe
     * collect added a ~40 ms driver action per call; reverted.) */
-  private def verifyPairs(d: DataFrame, candidates: DataFrame,
+  private[queries] def verifyPairs(d: DataFrame, candidates: DataFrame,
                           threshold: Double): DataFrame =
     pairJaccard(d, candidates)
       .filter(col("jaccard") >= threshold)
@@ -4209,7 +4058,7 @@ object PipelineOps {
 
   /** Distinct (doc_a < doc_b) pairs sharing a posting in `inv(doc_id,
     * shingle)`. */
-  private def pairCandidates(inv: DataFrame): DataFrame =
+  private[queries] def pairCandidates(inv: DataFrame): DataFrame =
     inv.as("a").join(inv.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -4355,210 +4204,13 @@ object PipelineOps {
     * index on it and the probe join prunes to file groups; sh is read only
     * for the candidate sliver). */
   def minhashIndexSave(d: DataFrame, dir: String, numPerms: Int = 64,
-                       bands: Int = 16, mode: String = "overwrite",
-                       srcBatch: Option[Long] = None): Unit = {
+                       bands: Int = 16): Unit = {
     val r = numPerms / bands
-    val sig = d.withColumn("sig", minhashSignature(col("sh"), numPerms, 42L))
+    d.withColumn("sig", minhashSignature(col("sh"), numPerms, 42L))
       .withColumn("band_hashes", array((0 until bands).map(bb =>
         xxhash64(slice(col("sig"), bb * r + 1, r))): _*))
       .select(col("doc_id"), col("sh"), col("band_hashes"))
-    // batch-layout appends stamp their origin as a DATA column too: the
-    // directory name is the idempotency unit, but only a row-level stamp
-    // survives [[minhashIndexCompact]] folding dirs together
-    srcBatch.fold(sig)(b => sig.withColumn("src_batch", lit(b)))
-      .write.mode(mode).parquet(dir)
-  }
-
-  /** Append one micro-batch's signatures to a [[minhashIndexSave]]-shaped
-    * index — the accumulation half of a self-deduplicating ingest stream
-    * ([[graft.streaming.EventStream.nearDupStream]]). IDEMPOTENT under
-    * Structured Streaming's documented batch re-execution: each batch
-    * writes its own `batch=<id>` partition directory (discovered as a
-    * normal partition column on read), a retry of an already-committed
-    * batch is a no-op, and a retry of a HALF-written batch overwrites the
-    * partial files instead of duplicating them. Job-level `_SUCCESS` is
-    * the commit marker — [[indexHasData]]/[[indexBatchCommitted]] never
-    * treat uncommitted part- files as index state. Concurrent writers of
-    * DIFFERENT batches are safe (disjoint subdirs); concurrent writers of
-    * the same batchId would need a transactional table format. */
-  def minhashIndexAppend(d: DataFrame, dir: String, batchId: Long,
-                         numPerms: Int = 64, bands: Int = 16): Unit =
-    if (!indexBatchCommitted(d.sparkSession, dir, batchId))
-      minhashIndexSave(d, dir + "/batch=" + batchId, numPerms, bands,
-        mode = "overwrite", srcBatch = Some(batchId))
-
-  private def fsOf(spark: SparkSession, dir: String) = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-  private def committedDataIn(fs: org.apache.hadoop.fs.FileSystem,
-                              d: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")) &&
-      fs.listStatus(d).exists(s =>
-        s.getPath.getName.startsWith("part-") && s.getLen > 0)
-
-  /** True iff `dir` already holds COMMITTED index data (job-level
-    * `_SUCCESS` present — partial part- files from a failed write are not
-    * index state), in the flat [[minhashIndexSave]] layout or in
-    * `batch=<id>` partition subdirs. `excludeBatch` ignores one batch's
-    * own partition, so a retried micro-batch doesn't mistake its earlier
-    * committed append for probe-able history. */
-  def indexHasData(spark: SparkSession, dir: String,
-                   excludeBatch: Option[Long] = None): Boolean = {
-    val (fs, path) = fsOf(spark, dir)
-    fs.exists(path) && (committedDataIn(fs, path) ||
-      fs.listStatus(path).exists { s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch=") &&
-          excludeBatch.forall(b => s.getPath.getName != s"batch=$b") &&
-          committedDataIn(fs, s.getPath)
-      })
-  }
-
-  /** True iff `batchId`'s [[minhashIndexAppend]] partition was fully
-    * committed (its `_SUCCESS` marker exists). */
-  def indexBatchCommitted(spark: SparkSession, dir: String,
-                          batchId: Long): Boolean = {
-    val (fs, path) = fsOf(spark, dir)
-    fs.exists(new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(path, s"batch=$batchId"), "_SUCCESS"))
-  }
-
-  final case class IndexCompactStats(batchesFolded: Int, filesBefore: Int,
-                                     filesAfter: Int)
-
-  /** Fold the accumulated `batch=<id>` partitions of a [[minhashIndexAppend]]
-    * index into one consolidated `batch=-1` base partition — the periodic
-    * rewrite a long-running ingest needs ([[graft.operators.Compaction]]'s
-    * small-files argument: dir count and footer opens grow per micro-batch
-    * without it). IDEMPOTENCY IS PRESERVED:
-    *
-    *   - every row keeps its origin in the `src_batch` DATA column (written
-    *     by every append), so a retried micro-batch's
-    *     `excludeBatch` probe still excludes exactly its own docs;
-    *   - each folded batch directory keeps its `_SUCCESS` marker (files
-    *     cleared), so [[minhashIndexAppend]]'s committed-batch check still
-    *     makes the retry a no-op;
-    *   - the base swap is staged: consolidated rows are fully written (with
-    *     their own `_SUCCESS`) to a dot-prefixed staging dir INVISIBLE to
-    *     index readers, then renamed in; a crash at any step is repaired by
-    *     the next call (recoverBase + the folded-batch sweep), never by
-    *     losing or double-counting rows past it.
-    *
-    * Call from the ingest loop (micro-batches are sequential, so no append
-    * or probe races the swap) — [[graft.streaming.EventStream.nearDupStream]]
-    * runs it every `compactEvery` batches. */
-  private def indexBasePath(root: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(root, "batch=-1")
-  private def indexStagingPath(root: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(root, ".compact_staging")
-  private def indexOldBasePath(root: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(root, ".compact_old")
-  private def indexPartFiles(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter(s => s.isFile &&
-      s.getPath.getName.startsWith("part-"))
-  private def indexClearToMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                 p: org.apache.hadoop.fs.Path): Unit = {
-    indexPartFiles(fs, p).foreach(s => fs.delete(s.getPath, false))
-    val marker = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-    if (!fs.exists(marker)) { fs.create(marker).close() }
-  }
-
-  /** True iff a [[minhashIndexCompact]] crashed mid-swap and left its
-    * markers behind — two fs.exists probes, cheap enough for every
-    * micro-batch. */
-  def indexNeedsRepair(spark: SparkSession, dir: String): Boolean = {
-    val (fs, root) = fsOf(spark, dir)
-    fs.exists(indexStagingPath(root)) || fs.exists(indexOldBasePath(root))
-  }
-
-  /** Restore a band index to a consistent state after a compaction crash:
-    * a missing base with a committed staging (crashed between renames)
-    * renames it in; a parked old base restores; then any batch dir whose
-    * rows already live in the base (its id in the base's `src_batch`) is
-    * cleared to its marker so no row is double-counted. Every
-    * [[minhashIndexCompact]] crash window leaves one of the two marker
-    * dirs behind (the swap parks a marker dir even on the first
-    * compaction), so probes that run repair-on-marker first
-    * ([[graft.streaming.EventStream.nearDupStream]]) never read a
-    * lost-or-doubled index. */
-  def repairBandIndex(spark: SparkSession, dir: String): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val base = indexBasePath(root)
-    val staging = indexStagingPath(root)
-    val oldBase = indexOldBasePath(root)
-    if (!fs.exists(base)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))) {
-        require(fs.rename(staging, base),
-          s"repair: rename $staging -> $base failed; staging copy left intact")
-      } else if (committedDataIn(fs, oldBase)) {
-        require(fs.rename(oldBase, base),
-          s"repair: rename $oldBase -> $base failed; parked copy left intact")
-      }
-    }
-    fs.delete(staging, true); fs.delete(oldBase, true)
-    if (committedDataIn(fs, base)) {
-      val folded = spark.read.parquet(base.toString)
-        .select(col("src_batch")).distinct().collect()
-        .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).toSet
-      folded.foreach { k =>
-        val p = new org.apache.hadoop.fs.Path(root, s"batch=$k")
-        if (indexPartFiles(fs, p).nonEmpty) indexClearToMarker(fs, p)
-      }
-    }
-  }
-
-  def minhashIndexCompact(spark: SparkSession, dir: String,
-                          targetBytes: Long = 128L << 20): IndexCompactStats = {
-    import org.apache.hadoop.fs.Path
-    val (fs, root) = fsOf(spark, dir)
-    val base = indexBasePath(root)
-    val staging = indexStagingPath(root)
-    val oldBase = indexOldBasePath(root)
-    repairBandIndex(spark, dir)
-    val hasBase = committedDataIn(fs, base)
-    val srcDirs = fs.listStatus(root).toSeq.filter { s =>
-      s.isDirectory && s.getPath.getName.startsWith("batch=") &&
-        s.getPath.getName != "batch=-1" && committedDataIn(fs, s.getPath)
-    }
-    val filesBefore = (srcDirs.map(_.getPath) :+ base)
-      .map(indexPartFiles(fs, _).size).sum
-    if (srcDirs.isEmpty)
-      return IndexCompactStats(0, filesBefore, indexPartFiles(fs, base).size)
-    // per-dir read (not the root: staging invisibility relies on never
-    // scanning dot-dirs, and per-dir reads sidestep partition inference);
-    // a pre-src_batch layout dir is upgraded by stamping its batch id
-    val parts = srcDirs.map { s =>
-      val one = spark.read.parquet(s.getPath.toString)
-      if (one.columns.contains("src_batch")) one
-      else one.withColumn("src_batch",
-        lit(s.getPath.getName.stripPrefix("batch=").toLong))
-    } ++ (if (hasBase) Seq(spark.read.parquet(base.toString)) else Seq.empty)
-    val union = parts.reduce(_ unionByName _)
-    val bytes = (srcDirs.map(_.getPath) :+ base)
-      .flatMap(indexPartFiles(fs, _)).map(_.getLen).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    union.repartition(nOut).write.mode("overwrite").parquet(staging.toString)
-    require(fs.exists(new Path(staging, "_SUCCESS")),
-      s"compaction staging write did not commit under $staging")
-    // swap ordering (round-11 review): a marker dir exists through EVERY
-    // window — the old base parks under .compact_old (an empty one is
-    // created when no base existed yet), sources clear BEFORE the marker
-    // is dropped — so a crash anywhere is detected by indexNeedsRepair
-    // and healed before the next probe, never read as lost/doubled rows.
-    // Hadoop reports most rename failures via `false`, not an exception —
-    // a failed swap must abort BEFORE sources are cleared, or the staging
-    // dir holds the only copy and the next repair would delete it.
-    if (fs.exists(base)) {
-      require(fs.rename(base, oldBase),
-        s"compaction: rename $base -> $oldBase failed; aborting swap")
-    } else { fs.mkdirs(oldBase); () }
-    require(fs.rename(staging, base),
-      s"compaction: rename $staging -> $base failed; aborting before source clear")
-    srcDirs.foreach(s => indexClearToMarker(fs, s.getPath))
-    fs.delete(oldBase, true)
-    IndexCompactStats(srcDirs.size, filesBefore, indexPartFiles(fs, base).size)
+      .write.mode("overwrite").parquet(dir)
   }
 
   /** Incremental near-dup: an incoming batch against a [[minhashIndexSave]]d
@@ -4569,11 +4221,9 @@ object PipelineOps {
     * indistinguishable from re-running the whole join. */
   def minhashDedupIncremental(newDocs: DataFrame, indexDir: String,
                               threshold: Double, numPerms: Int = 64,
-                              bands: Int = 16,
-                              excludeBatch: Option[Long] = None): DataFrame = {
-    val spark = newDocs.sparkSession
+                              bands: Int = 16): DataFrame = {
     val r = numPerms / bands
-    val idx = readIndexExcluding(spark, indexDir, excludeBatch)
+    val idx = newDocs.sparkSession.read.parquet(indexDir)
     val nsig = registerCache(newDocs.withColumn("sig",
       minhashSignature(col("sh"), numPerms, 42L)))
     val nband = registerCache(nsig.select(col("doc_id"),
@@ -4630,14 +4280,6 @@ object PipelineOps {
       .filter(col("rn") <= col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1)
       .select(col("doc_id"), col("shingle"))
   }
-
-  /** Prefix-filtered EXACT Jaccard join — identical result to
-    * [[ngramJaccardJoin]], sub-quadratic candidate generation on sparse
-    * corpora. (On dense corpora prefixes cannot prune — measured 3.7x slower
-    * than the count-join on the bench corpus; picking between them is the
-    * planner's job, [[similarityJoin]].) */
-  def prefixJaccardJoin(d: DataFrame, threshold: Double): DataFrame =
-    verifyPairs(d, pairCandidates(prefixIndex(d, threshold)), threshold)
 
   /** Adaptive similarity-join planner: measure the corpus with ONE cheap
     * aggregate ([[postingStats]] — Σ df·(df−1)/2 is the exact all-pairs
@@ -4723,11 +4365,10 @@ object PipelineOps {
     simhashNearDup(d, maxHamming, chunks, comboSize)
   }
 
-  /** THE pigeonhole chunk-key machinery, shared by the self-join
-    * ([[simhashNearDup]]) and cross-set ([[hashCrossNearDup]]) faces so the
-    * candidate scheme cannot drift between them: split the 64-bit `sh` into
-    * `chunks` pieces, emit one xxhash64-packed key per `comboSize`-subset —
-    * two hashes within hamming `chunks - comboSize` MUST share a key. */
+  /** The pigeonhole chunk-key machinery of [[simhashNearDup]]: split the
+    * 64-bit `sh` into `chunks` pieces, emit one xxhash64-packed key per
+    * `comboSize`-subset — two hashes within hamming `chunks - comboSize`
+    * MUST share a key. */
   private def chunkKeyed(d: DataFrame, chunks: Int, comboSize: Int): DataFrame = {
     // even width split: base 64/chunks bits per chunk, remainder spread one
     // bit each over the leading chunks — ceil-width slicing left chunk 9 of
@@ -4767,60 +4408,6 @@ object PipelineOps {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** Cross-set 64-bit-hash near-dup: indexed `(doc_id, sh)` vs incoming
-    * `(doc_id, sh)` under the same pigeonhole chunk-key rule as
-    * [[simhashNearDup]] (complete for hamming ≤ chunks − comboSize) with
-    * the exact `bit_count` verify — the probe half of an incremental
-    * hash-fingerprint index (text simhash or image phash alike). Output
-    * pairs are (doc_a = indexed, doc_b = incoming). */
-  def hashCrossNearDup(idx: DataFrame, incoming: DataFrame, maxHamming: Int,
-                       chunks: Int = 4, comboSize: Int = 1): DataFrame = {
-    require(comboSize >= 1 && comboSize <= chunks - maxHamming,
-      s"comboSize must be in [1, chunks - maxHamming] = [1, ${chunks - maxHamming}]")
-    val a = chunkKeyed(idx, chunks, comboSize).select(col("combo"), col("combo_key"),
-      col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val b = chunkKeyed(incoming, chunks, comboSize).select(col("combo"), col("combo_key"),
-      col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("combo", "combo_key"))
-      // a doc on both sides (outside writer fed the index the incoming
-      // batch) must not emit a self-pair — the minhashDedupIncremental rule
-      .filter(col("doc_a") =!= col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** Read a `batch=<id>`-layout index EXCLUDING one batch's own rows — the
-    * retried-micro-batch rule every incremental probe shares (a retry's
-    * earlier committed rows are "incoming", not history). The row-level
-    * `src_batch` stamp is authoritative when present (it survives
-    * [[minhashIndexCompact]] folding the dirs); the directory-derived
-    * `batch` partition column is the pre-compaction fallback. Null-safe so
-    * legacy un-stamped rows are never silently dropped. ONE implementation:
-    * an inline copy drifted from its sibling once (review finding). */
-  private[graft] def readIndexExcluding(spark: SparkSession, dir: String,
-                                        excludeBatch: Option[Long]): DataFrame = {
-    val idx0 = spark.read.parquet(dir)
-    excludeBatch match {
-      case Some(b) if idx0.columns.contains("src_batch") =>
-        idx0.filter(!(col("src_batch") <=> lit(b)))
-      case Some(b) if idx0.columns.contains("batch") =>
-        idx0.filter(col("batch") =!= lit(b))
-      case _ => idx0
-    }
-  }
-
-  /** Append one batch's (doc_id, phash) rows to a perceptual-hash index —
-    * the [[minhashIndexAppend]] layout and idempotency discipline (batch
-    * partition dirs, `_SUCCESS` commit markers, row-level `src_batch`
-    * stamps that survive [[minhashIndexCompact]]-style folding). */
-  def phashIndexAppend(d: DataFrame, dir: String, batchId: Long): Unit =
-    if (!indexBatchCommitted(d.sparkSession, dir, batchId))
-      d.select(col("doc_id"), col("phash"))
-        .withColumn("src_batch", lit(batchId))
-        .write.mode("overwrite").parquet(dir + "/batch=" + batchId)
-
   /** Corpus vocabulary build: the top-`v` whitespace tokens by (count DESC,
     * token ASC), id = rank − 1 — the fixed-vocab half of tokenize-to-ids.
     * Scale shape: one map-side-combined term aggregate, then TakeOrdered
@@ -4846,9 +4433,9 @@ object PipelineOps {
     * to 6 — it catches reorderings and most substitutions, not all). The
     * vocab rides a broadcast and
     * each doc encodes in ONE pass over its tokens (hash lookups, integer
-    * sums) — no token-level explode, no shuffle, any corpus size; the same
-    * trade as [[ivfAssignBroadcast]]: off codegen, but O(1) lookups against
-    * a shared map beat a corpus-wide token explosion + re-aggregation.
+    * sums) — no token-level explode, no shuffle, any corpus size; the
+    * trade: off codegen, but O(1) lookups against a shared map beat a
+    * corpus-wide token explosion + re-aggregation.
     * Tokenization itself stays in the codegen'd [[tokens]] expression so it
     * is bit-identical to every other doc_* query's. Integer-only outputs →
     * the DuckDB mirror (explode + vocab join + grouped sums) hash-matches
@@ -4881,24 +4468,6 @@ object PipelineOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Offline IVF training: seeded k-means over a deterministic sample.
-    * Returns the k centroids driver-side (tiny: k × dim doubles). At 100 TB
-    * this runs ONCE as a batch job and the centroids are persisted; serving
-    * only ever calls [[ivfSearch]] — the round-2 design retrained inside the
-    * query (3 driver-coordinated Lloyd iterations per invocation), which was
-    * both the slowest part of the bench and un-oracle-able. */
-  def ivfTrain(emb: DataFrame, k: Int, maxIter: Int = 3): Array[Array[Double]] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val feat = emb.select(
-      array_to_vector(transform(col("embedding"), x => x.cast("double"))).as("features"))
-      .sample(withReplacement = false, 0.2, seed = 7L)
-    val model = new KMeans().setK(k).setSeed(42L).setMaxIter(maxIter)
-      .setInitMode("random") // seeded; k-means|| costs extra full passes
-      .fit(feat)
-    model.clusterCenters.map(_.toArray)
-  }
-
   /** Deterministic centroid selection from public arithmetic: the k corpus
     * vectors with the smallest (signed) mix64(fnv64("ivf-seed-" ++ vec_id))
     * become the cell centroids, cell = rank. A hash-ranked sample is an
@@ -4915,8 +4484,8 @@ object PipelineOps {
     *
     * Memoized per (session, corpus plan, prefix, k): the centroids are a
     * TRAINED SERVING ARTIFACT — train once, serve forever is this
-    * codebase's standing index discipline ([[ivfSave]]/[[ivfLoad]] is the
-    * durable form; [[bpeModelFor]]/winIdxFor are the same lifecycle) — and
+    * codebase's standing index discipline ([[bpeModelFor]]/winIdxFor are
+    * the same lifecycle) — and
     * every ANN catalog query was re-collecting the identical k rows on
     * every invocation (a ~100 ms TakeOrdered driver action each; ~12 per
     * bench sweep). The key hashes the ANALYZED corpus plan, so a different
@@ -4949,61 +4518,10 @@ object PipelineOps {
     * At 100 TB this runs as a batch job whose output is written bucketed by
     * `cell`, so [[ivfSearch]]-shaped probes prune to file groups instead of
     * recomputing the argmin per query. Pure projection, no shuffle. */
-  /** Persist trained IVF centroids as a tiny parquet table (cell_id,
-    * centroid) — the train/serve split's durable artifact: train once
-    * offline ([[ivfTrain]]), save, then any number of serving sessions
-    * [[ivfLoad]] and search without touching the training corpus. */
-  def ivfSave(spark: SparkSession, centroids: Seq[Array[Double]], dir: String): Unit = {
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("cell_id", "centroid")
-      .repartition(1) // k rows; one footer beats 32 slivers
-      .write.mode("overwrite").parquet(dir)
-  }
-
-  /** Load [[ivfSave]]'d centroids, ordered by cell_id (the ordering IS the
-    * cell numbering [[ivfAssign]]/[[ivfSearch]] use). */
-  def ivfLoad(spark: SparkSession, dir: String): Array[Array[Double]] =
-    spark.read.parquet(dir).orderBy(col("cell_id"))
-      .collect().map(_.getSeq[Double](1).toArray)
-
   def ivfAssign(emb: DataFrame, centroids: Seq[Array[Double]]): DataFrame =
     withCellDists(emb, centroids).withColumn("cell",
         (array_position(col("dists"), array_min(col("dists"))) - 1).cast("int"))
       .drop("dists")
-
-  /** [[ivfAssign]] for centroid counts past literal-friendly sizes: the
-    * centroid matrix rides ONE torrent broadcast to each executor instead
-    * of being serialized into every task as expression literals (at the
-    * SemDeDup-paper k of ~100k 64-dim cells that's ~50 MB per task binary
-    * — a non-starter; as a broadcast it ships once per executor). The
-    * argmin is a closure over the broadcast — off whole-stage codegen, but
-    * the O(k·dim) flops per row dwarf the codegen delta at exactly the k
-    * where this path is chosen. Same tie rule as [[ivfAssign]]: lowest
-    * cell wins equal distances. */
-  def ivfAssignBroadcast(emb: DataFrame, centroids: Seq[Array[Double]]): DataFrame = {
-    val bc = emb.sparkSession.sparkContext.broadcast(centroids.toArray)
-    val assign = udf { (v: Seq[Float]) =>
-      val cs = bc.value
-      var best = 0
-      var bd = Double.PositiveInfinity
-      var c = 0
-      while (c < cs.length) {
-        val ct = cs(c)
-        var d = 0.0
-        var i = 0
-        while (i < ct.length) {
-          val t = v(i).toDouble - ct(i); d += t * t; i += 1
-        }
-        if (d < bd) { bd = d; best = c }
-        c += 1
-      }
-      best
-    }
-    emb.select(col("vec_id"), col("embedding"),
-      l2norm(col("embedding")).as("nrm"),
-      assign(col("embedding")).cast("int").as("cell"))
-  }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup via
     * clustering — k-means cells bound the pairwise-cosine search the way LSH
@@ -5013,10 +4531,8 @@ object PipelineOps {
     * seed centroids are collected to the driver and shipped as plan
     * literals, so k must stay bounded — beyond kMax·occ vectors this
     * convenience path's occupancy (and the occupancy-quadratic pair join)
-    * grows with n. At that scale, train offline instead ([[ivfTrain]] →
-    * [[ivfSave]]), load a properly sized k ([[ivfLoad]]), and call the
-    * centroid-taking overload — with [[ivfAssignBroadcast]] underneath
-    * once k is past literal-friendly sizes. Centroids here are the
+    * grows with n. At that scale, pass a properly sized set of centroids
+    * to the centroid-taking overload. Centroids here are the
     * deterministic hash-ranked seeds ([[ivfSeedCentroids]]) so DuckDB
     * reproduces the whole pipeline — assignment, pairs, and the greedy
     * min-id keeper — bit-exactly. Drop rule: a vector is dropped iff some
@@ -5070,8 +4586,7 @@ object PipelineOps {
     * convenience path's corpus-derived k is capped at `kMax` (plan-literal
     * centroids must stay bounded); at 100 TB run the centroid-taking
     * overload repeatedly (assign → update → re-seed centroids) off the
-    * same cached corpus, with [[ivfAssignBroadcast]] once the trained k
-    * outgrows literals. */
+    * same cached corpus. */
   def kmeansUpdate(base: DataFrame, occ: Int = 64, kMax: Int = 1 << 12): DataFrame = {
     val k = math.min(kMax.toLong, math.max(16L, (memoCount(base) + (occ - 1L)) / occ)).toInt
     kmeansUpdate(base, ivfSeedCentroids(base, k).toIndexedSeq)
@@ -5121,8 +4636,7 @@ object PipelineOps {
   }
 
   /** IVF-flat ANN with deterministic seed centroids (see [[ivfSeedCentroids]]
-    * / [[ivfSearch]]); [[ivfTrain]] is the offline k-means alternative when
-    * cell balance matters more than oracle-ability. */
+    * / [[ivfSearch]]). */
   def annIvf(emb: DataFrame, k: Int, nprobe: Int, topK: Int): DataFrame =
     ivfSearch(emb, ivfSeedCentroids(emb, k).toIndexedSeq, nprobe, topK)
 
@@ -5133,12 +4647,12 @@ object PipelineOps {
   // while the raw vectors stay in parquet. Codebooks here are the same
   // deterministic hash-ranked corpus sample as [[ivfSeedCentroids]] (domain
   // 'pq-seed-'), so DuckDB reproduces encode AND search bit-exactly; at real
-  // scale swap in per-subspace k-means ([[ivfTrain]] over slices) — the plan
-  // shapes below do not change.
+  // scale swap in per-subspace k-means — the plan shapes below do not
+  // change.
 
   /** Hash-ranked codebook donors: codeword c of subspace s is donor c's
     * s-th subvector (a shared-donor init; classic PQ trains each subspace
-    * independently, which [[ivfTrain]] over slices provides offline). */
+    * independently). */
   def pqSeedCodebook(emb: DataFrame, nCodes: Int): Array[Array[Double]] =
     seedVectors(emb, nCodes, "pq-seed-")
 

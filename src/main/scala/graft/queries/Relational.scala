@@ -1291,8 +1291,7 @@ object Relational {
     }),
 
     // time-bounded conversion: views that draw a same-user click within
-    // 30 minutes — the batch face of the streaming interval join
-    // (EventStream.viewToAction). The join is user-keyed AND time-bounded,
+    // 30 minutes. The join is user-keyed AND time-bounded,
     // so state per key is a bounded time slice at any event volume;
     // DISTINCT collapses multi-click views before the per-user roll-up.
     "q_windowed_funnel" -> ((spark, dir) => {

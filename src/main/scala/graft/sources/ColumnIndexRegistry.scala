@@ -45,7 +45,7 @@ object ColumnIndexRegistry {
     * The rebuild runs ASYNC and COALESCED per dir (advisor finding: a
     * synchronous rebuild inside every commit added index-derivation
     * latency to the hot path of actively-written tables — twice per
-    * compactEvery micro-batch). Commits arriving while a rebuild is in
+    * append-plus-compaction). Commits arriving while a rebuild is in
     * flight just mark the dir dirty; the worker re-derives once more from
     * the then-current snapshot, so the LAST commit's zones always land.
     * Staleness in the gap is safe by pruneAmong's contract. */
@@ -113,10 +113,6 @@ object ColumnIndexRegistry {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .makeQualified(p).toString).getOrElse(p.toString)
   }
-
-  /** Spec hook. */
-  private[graft] def ownersOf(qualifiedDir: String): Set[String] =
-    Option(byDir.get(qualifiedDir)).map(_.owners).getOrElse(Set.empty)
 
   /** Spec hook: entries currently registered (dir -> owners). */
   private[graft] def snapshot: Map[String, Set[String]] =

@@ -31,9 +31,8 @@ import org.apache.spark.sql.DataFrame
   *
   * Idempotent appends: an optional `txn` (appId, version) action makes a
   * commit a no-op when the log already carries that appId at >= version —
-  * the streaming foreachBatch sink passes its micro-batch id, turning
-  * at-least-once batch redelivery into exactly-once table contents
-  * (the same discipline as the persisted MinHash index's batch stamps).
+  * a caller that passes a batch id turns at-least-once batch redelivery
+  * into exactly-once table contents.
   *
   * Supported: append + overwrite, schema declared on first commit,
   * schema-compatibility enforcement on append, version continuation after
@@ -1844,75 +1843,6 @@ object DeltaWriter {
         }
     }
     if (fromCheckpoint.isEmpty) None else Some(fromCheckpoint.max)
-  }
-
-  /** Exactly-once streaming sink: foreachBatch append with the micro-batch
-    * id as the txn version — a redelivered batch is skipped by the ledger,
-    * so the TABLE is exactly-once while the stream stays at-least-once
-    * (the [[graft.streaming.EventStream]] index discipline, applied to a
-    * Delta sink). `appId` must be stable for the query's lifetime — use
-    * the checkpoint's query id or a caller-chosen pipeline name.
-    *
-    * Periodic maintenance knobs, all the same shape (every n-th batch,
-    * inline in the batch slot — the trade a single-writer log REQUIRES,
-    * since a concurrent maintainer would lose its commit race to the
-    * next append anyway; a failed leg warns and never fails the stream):
-    *
-    *  - `compactEvery`: [[compact]] — a micro-batch sink accumulates one
-    *    small file per batch per partition, and a 100 TB scan over
-    *    millions of tiny files is planner-bound long before data-bound
-    *  - `cleanupLogEvery`: [[cleanupLog]] at `logRetentionMs` — bounds
-    *    the `_delta_log` JSON count (re-checkpointing at the head first,
-    *    per cleanupLog's own contract)
-    *  - `vacuumEvery`: [[vacuum]] at `vacuumRetentionMs` — reclaims
-    *    compacted-away and overwritten files once they age out
-    *
-    * Together a month-long micro-batch sink keeps bounded data files AND
-    * bounded log without an external scheduler. Retentions default to
-    * the library defaults (7d vacuum / 30d log); cleanupLog runs BEFORE
-    * vacuum in the slot so retired JSON is already covered by a fresh
-    * tombstone-carrying checkpoint when vacuum reads its clocks. */
-  def streamSink(data: DataFrame, dir: String, appId: String,
-                 compactEvery: Option[Int] = None,
-                 targetFileBytes: Long = 128L << 20,
-                 /** Clustering columns for the periodic compaction — a
-                   * micro-batch sink that keeps itself Z-ORDERED, so the
-                   * table stays multi-column-prunable while it grows. */
-                 zorderBy: Seq[String] = Seq.empty,
-                 cleanupLogEvery: Option[Int] = None,
-                 logRetentionMs: Long = 30L * 24 * 3600 * 1000,
-                 vacuumEvery: Option[Int] = None,
-                 vacuumRetentionMs: Long = 7L * 24 * 3600 * 1000)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    Seq("compactEvery" -> compactEvery, "cleanupLogEvery" -> cleanupLogEvery,
-        "vacuumEvery" -> vacuumEvery).foreach { case (name, knob) =>
-      knob.foreach(n => require(n > 0, s"$name must be > 0, got $n"))
-    }
-    def leg(batchId: Long, every: Option[Int], what: String)(run: => Unit): Unit =
-      every.foreach { n =>
-        if (batchId > 0 && batchId % n == 0)
-          try run
-          catch {
-            case scala.util.control.NonFatal(e) => System.err.println(
-              s"[graft] stream-sink $what on $dir failed (contents stay " +
-                s"correct): $e")
-          }
-      }
-    data.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        write(batch, dir, mode = "append", txn = Some((appId, batchId)))
-        val s = batch.sparkSession
-        leg(batchId, compactEvery, "compaction") {
-          compact(s, dir, targetFileBytes, zorderBy = zorderBy); ()
-        }
-        leg(batchId, cleanupLogEvery, "log cleanup") {
-          cleanupLog(s, dir, logRetentionMs); ()
-        }
-        leg(batchId, vacuumEvery, "vacuum") {
-          vacuum(s, dir, vacuumRetentionMs); ()
-        }
-        ()
-    }
   }
 
   private[sources] def jstr(s: String): String = mapper.writeValueAsString(s)

@@ -34,8 +34,8 @@ import org.apache.spark.sql.types._
   *
   * Idempotent appends: an optional (appId, version) ledger lives in the
   * snapshot SUMMARY (`graft-app-id`/`graft-app-version`) — the same
-  * exactly-once contract as [[DeltaWriter]]'s txn action, so
-  * [[streamSink]] turns at-least-once micro-batch redelivery into an
+  * exactly-once contract as [[DeltaWriter]]'s txn action, so a caller
+  * that passes a batch id turns at-least-once redelivery into an
   * exactly-once table.
   *
   * Supported: v2 tables, append + overwrite (appending onto a legacy-v1
@@ -456,71 +456,6 @@ object IcebergWriter {
     }
     fs.delete(scratch, true)
     moved
-  }
-
-  /** Exactly-once streaming sink — [[DeltaWriter.streamSink]]'s contract
-    * for Iceberg tables, with the format's own periodic maintenance legs
-    * behind the same knob shape (every n-th batch, inline in the batch
-    * slot; a failed leg warns and never fails the stream):
-    *
-    *  - `compactEvery`: [[compactDataFiles]] — bounds data-file count
-    *  - `expireEvery`: [[expireSnapshots]] at `expireOlderThanMs` —
-    *    bounds snapshot history and reclaims files only expired
-    *    snapshots referenced (compacted-away originals, spent deletes)
-    *  - `orphanReclaimEvery`: [[removeOrphanFiles]] at `orphanOlderThanMs`
-    *    — sweeps crashed writers' unreferenced files
-    *  - `cleanupMetadataEvery`: [[cleanupMetadata]] keeping
-    *    `keepMetadata` versions — bounds the metadata JSON count (a
-    *    micro-batch sink commits one metadata version per batch)
-    *
-    * Together a month-long micro-batch sink keeps bounded files AND
-    * bounded metadata without an external scheduler. */
-  def streamSink(data: DataFrame, dir: String, appId: String,
-                 compactEvery: Option[Int] = None,
-                 targetFileBytes: Long = 128L << 20,
-                 /** Clustering columns for the periodic compaction — a
-                   * micro-batch sink that keeps itself Z-ORDERED. */
-                 zorderBy: Seq[String] = Seq.empty,
-                 expireEvery: Option[Int] = None,
-                 expireOlderThanMs: Long = 7L * 24 * 3600 * 1000,
-                 orphanReclaimEvery: Option[Int] = None,
-                 orphanOlderThanMs: Long = 3L * 24 * 3600 * 1000,
-                 cleanupMetadataEvery: Option[Int] = None,
-                 keepMetadata: Int = 5)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    Seq("compactEvery" -> compactEvery, "expireEvery" -> expireEvery,
-        "orphanReclaimEvery" -> orphanReclaimEvery,
-        "cleanupMetadataEvery" -> cleanupMetadataEvery).foreach { case (name, knob) =>
-      knob.foreach(n => require(n > 0, s"$name must be > 0, got $n"))
-    }
-    def leg(batchId: Long, every: Option[Int], what: String)(run: => Unit): Unit =
-      every.foreach { n =>
-        if (batchId > 0 && batchId % n == 0)
-          try run
-          catch {
-            case scala.util.control.NonFatal(e) => System.err.println(
-              s"[graft] stream-sink $what on $dir failed (contents stay " +
-                s"correct): $e")
-          }
-      }
-    data.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        write(batch, dir, mode = "append", txn = Some((appId, batchId)))
-        val s = batch.sparkSession
-        leg(batchId, compactEvery, "compaction") {
-          compactDataFiles(s, dir, targetFileBytes, zorderBy = zorderBy); ()
-        }
-        leg(batchId, expireEvery, "snapshot expiry") {
-          expireSnapshots(s, dir, expireOlderThanMs); ()
-        }
-        leg(batchId, orphanReclaimEvery, "orphan reclaim") {
-          removeOrphanFiles(s, dir, orphanOlderThanMs); ()
-        }
-        leg(batchId, cleanupMetadataEvery, "metadata cleanup") {
-          cleanupMetadata(s, dir, keepMetadata); ()
-        }
-        ()
-    }
   }
 
   /** Data-file compaction — [[DeltaWriter.compact]]'s story for the other

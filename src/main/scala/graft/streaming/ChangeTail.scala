@@ -25,8 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * On restart, an offsets file without its commit marker is REPLAYED
   * with the SAME pinned range (the change reads are deterministic in
   * (from, to]), so a sink that is idempotent per batch — like
-  * [[parquetSink]]'s `batch=<id>` + `_SUCCESS` discipline, the same
-  * contract the repo's streaming index appends use — lands every change
+  * [[parquetSink]]'s `batch=<id>` + `_SUCCESS` discipline — lands every change
   * exactly once across any number of crashes. Marker writes go through
   * write-temp-then-rename (atomic on HDFS-like stores; on object stores
   * the single-writer-per-checkpoint assumption applies, as it does for

@@ -3,7 +3,7 @@ package graft.tools
 import graft.queries.PipelineOps
 
 /** Offline PCA training CLI — the train half of the train/serve split
-  * (the PCA analogue of [[graft.queries.PipelineOps.ivfSave]]): compute the
+  * for the served `emb_pca` projection: compute the
   * exact-decimal Gram matrix of a reference corpus, extract the top-k
   * Jacobi eigenbasis on the driver (dim x dim — a few KB at any corpus
   * size), and emit it as source-embeddable literals. The checked-in

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (a Spark upgrade flipping a default, a refactor dropping a builder
   * line), the failure should name the contract, not surface as scattered
   * hash mismatches:
-  *   - UTC session TZ: the NTZ→LTZ casts in q_sessionize/q_range_join and
-  *     EventStream are pure type changes ONLY under UTC.
+  *   - UTC session TZ: the NTZ→LTZ casts in q_sessionize/q_range_join are
+  *     pure type changes ONLY under UTC.
   *   - ANSI mode ON: long-sum overflow (gramMatrixGrid's cross-partition
   *     half, kmeansUpdate, BPE pair counts) errors loudly instead of
   *     wrapping.

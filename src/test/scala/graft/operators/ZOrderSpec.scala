@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -10,6 +11,20 @@ import graft.SparkSpec
   * prunes only its own column. */
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Per-file (min, max) of a column over a written dataset — the stats a
+    * min/max-skipping scan consults. One distributed pass, grouped by
+    * file. */
+  private def fileRanges(df: DataFrame, c: String): Map[String, (Long, Long)] =
+    df.groupBy(input_file_name().as("f"))
+      .agg(min(col(c)).cast("long").as("mn"), max(col(c)).cast("long").as("mx"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+  /** Fraction of files a [lo, hi] range predicate on `c` must read given
+    * the per-file ranges — the skipping effectiveness measure. */
+  private def scanFraction(ranges: Map[String, (Long, Long)], lo: Long, hi: Long): Double =
+    if (ranges.isEmpty) 0.0
+    else ranges.values.count { case (mn, mx) => mx >= lo && mn <= hi }.toDouble / ranges.size
 
   test("zValue2 equals a reference bit-interleave") {
     def ref(x: Long, y: Long, bits: Int): Long = {
@@ -52,10 +67,10 @@ class ZOrderSpec extends SparkSpec {
     assert(z.count() == 256L * 256L && l.count() == 256L * 256L)
 
     // a 1/16-wide band predicate on each dimension
-    val zx = ZOrder.scanFraction(ZOrder.fileRanges(z, "x"), 64, 79)
-    val zy = ZOrder.scanFraction(ZOrder.fileRanges(z, "y"), 64, 79)
-    val lx = ZOrder.scanFraction(ZOrder.fileRanges(l, "x"), 64, 79)
-    val ly = ZOrder.scanFraction(ZOrder.fileRanges(l, "y"), 64, 79)
+    val zx = scanFraction(fileRanges(z, "x"), 64, 79)
+    val zy = scanFraction(fileRanges(z, "y"), 64, 79)
+    val lx = scanFraction(fileRanges(l, "x"), 64, 79)
+    val ly = scanFraction(fileRanges(l, "y"), 64, 79)
     // linear: perfect on x, useless on y (every file spans all of y)
     assert(lx <= 0.25, s"linear x fraction $lx")
     assert(ly == 1.0, s"linear y fraction $ly")
@@ -77,7 +92,7 @@ class ZOrderSpec extends SparkSpec {
     ZOrder.writeZOrdered(a, col("x"), col("y"), bits = 7, nFiles = 8, dirA)
     ZOrder.writeZOrdered(b, col("x"), col("y"), bits = 7, nFiles = 8, dirB)
     def rangeSet(dir: String, c: String) =
-      ZOrder.fileRanges(spark.read.parquet(dir), c).values.toSeq.sorted
+      fileRanges(spark.read.parquet(dir), c).values.toSeq.sorted
     assert(rangeSet(dirA, "x") == rangeSet(dirB, "x"))
     assert(rangeSet(dirA, "y") == rangeSet(dirB, "y"))
   }

@@ -20,18 +20,6 @@ class AnnIvfSpec extends AnyFunSuite {
   private lazy val brute = PipelineOps.dfQueries("ann_cosine_topk")(spark, sfDir)
     .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
 
-  test("ivfSave/ivfLoad round-trips centroids; search from disk == in-memory") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString + "/centroids"
-    val trained = PipelineOps.ivfSeedCentroids(embs, k = 16)
-    PipelineOps.ivfSave(spark, trained.toIndexedSeq, dir)
-    val loaded = PipelineOps.ivfLoad(spark, dir)
-    assert(loaded.length == trained.length)
-    trained.zip(loaded).foreach { case (a, b) => assert(a.toSeq == b.toSeq) }
-    val fromDisk = PipelineOps.ivfSearch(embs, loaded.toIndexedSeq, nprobe = 4, topK = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    assert(fromDisk.sortBy(t => (t._1, t._4)).toSeq === ivf.sortBy(t => (t._1, t._4)).toSeq)
-  }
-
   test("five probes, ranks dense from 1, cosines non-increasing per probe") {
     assert(ivf.map(_._1).distinct.sorted.toSeq === Seq(0L, 1L, 2L, 3L, 4L))
     ivf.groupBy(_._1).foreach { case (_, rows) =>
@@ -86,31 +74,5 @@ class AnnIvfSpec extends AnyFunSuite {
     val again = PipelineOps.ivfAssign(embs, cents)
       .select("vec_id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(again === assigned.map(t => (t._1, t._3)).toSet)
-  }
-
-  test("ivfAssignBroadcast assigns the same cells as the literal path") {
-    val cents = PipelineOps.ivfSeedCentroids(embs, 8).toIndexedSeq
-    val lit = PipelineOps.ivfAssign(embs, cents)
-      .select("vec_id", "cell").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toMap
-    val bc = PipelineOps.ivfAssignBroadcast(embs, cents)
-      .select("vec_id", "cell", "nrm").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-    assert(bc.length === lit.size)
-    bc.foreach { case (id, cell, nrm) =>
-      assert(cell === lit(id), s"vec $id")
-      assert(nrm > 0.0)
-    }
-  }
-
-  test("offline k-means train + fixed-centroid search compose") {
-    val cents = PipelineOps.ivfTrain(embs, k = 8, maxIter = 2)
-    assert(cents.length === 8 && cents.forall(_.length === 64))
-    val res = PipelineOps.ivfSearch(embs, cents.toIndexedSeq, nprobe = 2, topK = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    assert(res.map(_._1).distinct.sorted.toSeq === Seq(0L, 1L, 2L, 3L, 4L))
-    res.groupBy(_._1).foreach { case (_, rows) =>
-      assert(rows.sortBy(_._4).map(_._4).toSeq === (1L to rows.length).toSeq)
-    }
   }
 }

@@ -97,33 +97,6 @@ class BpeEnsembleSpec extends AnyFunSuite {
     assert(d1.select("syms").collect()(0).getSeq[String](0) == Seq("ab"))
   }
 
-  test("bpeSave/bpeLoad round-trips the model; OOV encode equals training-path encode") {
-    import spark.implicits._
-    val corpus = Seq("low lower lowest", "low low newer", "wider new newer").toDF("text")
-    val model = PipelineOps.bpeTrain(corpus, numMerges = 6)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_model").toString
-    PipelineOps.bpeSave(spark, model, dir)
-    val (merges2, dict2) = PipelineOps.bpeLoad(spark, dir)
-    assert(merges2 == model._1)
-    val dictRows = model._2.select("word", "freq", "syms").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2))).toSet
-    val loadedRows = dict2.select("word", "freq", "syms").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2))).toSet
-    assert(loadedRows == dictRows)
-    // serve-time OOV path: encoding the training words from scratch with
-    // the loaded merges reproduces the persisted dict's symbol sequences
-    val reEnc = PipelineOps.bpeEncodeWords(
-        dict2.select(col("word")), merges2)
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    dictRows.foreach { case (w, _, syms) =>
-      assert(reEnc(w) == syms, s"word $w")
-    }
-    // a genuinely unseen word still encodes (merges apply where they can)
-    val oov = PipelineOps.bpeEncodeWords(Seq("lowlands").toDF("word"), merges2)
-      .collect()(0).getSeq[String](1)
-    assert(oov.mkString == "lowlands")
-  }
-
   test("doc_wordpiece_encode == driver-side greedy longest-prefix replica") {
     // rebuild the vocab exactly as the catalog query does (distinct BPE
     // dict symbols), re-encode every distinct word with an independent

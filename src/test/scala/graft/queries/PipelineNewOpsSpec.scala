@@ -206,18 +206,6 @@ class PipelineNewOpsSpec extends AnyFunSuite {
         s"cell $k: grid ${g / 1e12} vs exact ${exact(k)}")
   }
 
-  test("gramMatrixFast: Kahan double kernel agrees with the exact kernel") {
-    val e = PipelineOps.embs(spark, sfDir)
-    val exact = PipelineOps.gramMatrix(e, dim = 64).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDecimal(2).doubleValue()).toMap
-    val fast = PipelineOps.gramMatrixFast(e, dim = 64).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(fast.size == 64 * 65 / 2)
-    for ((k, d) <- exact)
-      assert(math.abs(fast(k) - d) <= 1e-9 * math.max(1.0, math.abs(d)),
-        s"cell $k: fast ${fast(k)} vs exact $d")
-  }
-
   test("pcaBasis: orthonormal eigenbasis of the gram, descending, deterministic") {
     val e = PipelineOps.embs(spark, sfDir)
     val gram = PipelineOps.gramMatrix(e, dim = 64)
@@ -379,60 +367,12 @@ class PipelineNewOpsSpec extends AnyFunSuite {
     assert(got.forall(_._1 == 0L), "star pairs must anchor at the min indexed doc")
     assert(got.map(_._2).sorted.toSeq == (1L until 10000L by 2).toSeq,
       "every incoming doc must appear in exactly one star pair")
-  }
-
-  test("band-index compaction: identical probes, fewer dirs, idempotency intact") {
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("mhcompact").toString + "/idx"
-    val all = PipelineOps.docs(spark, sfDir)
-      .select(col("doc_id"), graft.functions.TextFunctions.shingles(col("text"), 3).as("sh"))
-    // four appended micro-batches (by id mod 5), probes come from the 5th
-    (0L until 4L).foreach { b =>
-      PipelineOps.minhashIndexAppend(all.filter(col("doc_id") % 5 === b), dir, b)
-    }
-    val incoming = all.filter(col("doc_id") % 5 === 4)
-    def probe(excl: Option[Long] = None) =
-      PipelineOps.minhashDedupIncremental(incoming, dir, 0.3, excludeBatch = excl)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(identity).toSeq
-    val before = probe()
-    val beforeExcl = probe(Some(1L))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataDirs = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(s => s.isDirectory &&
-        fs.listStatus(s.getPath).exists(_.getPath.getName.startsWith("part-")))
-    assert(dataDirs.length == 4)
-    val stats = PipelineOps.minhashIndexCompact(spark, dir)
-    assert(stats.batchesFolded == 4)
-    assert(dataDirs.length == 1, "all rows must fold into the single base dir")
-    // probes are indistinguishable before/after, including the retry
-    // exclusion (src_batch survives the fold)
-    assert(probe() == before)
-    assert(probe(Some(1L)) == beforeExcl)
-    // a retried append of a folded batch stays a no-op
-    assert(PipelineOps.indexBatchCommitted(spark, dir, 2L))
-    PipelineOps.minhashIndexAppend(incoming, dir, 2L)
-    assert(dataDirs.length == 1, "retry of a folded batch must not rewrite files")
-    // crash simulation: batch=1's files reappear (cleared-phase crash);
-    // the next compact's repair sweep removes them without double-counting
-    PipelineOps.minhashIndexSave(all.filter(col("doc_id") % 5 === 1),
-      dir + "/batch=1", mode = "overwrite", srcBatch = Some(1L))
-    assert(dataDirs.length == 2)
-    PipelineOps.minhashIndexCompact(spark, dir)
-    assert(dataDirs.length == 1)
-    assert(probe() == before, "repair must not duplicate or lose rows")
-    // compacting an already-compact index is a no-op fold
-    assert(PipelineOps.minhashIndexCompact(spark, dir).batchesFolded == 0)
-    // mid-swap crash: the base parked under .compact_old, staging committed,
-    // nothing renamed in yet — the marker-triggered repair (what
-    // nearDupStream runs before probing) must restore an identical index
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(fsp, "batch=-1"),
-      new org.apache.hadoop.fs.Path(fsp, ".compact_staging")))
-    assert(PipelineOps.indexNeedsRepair(spark, dir))
-    PipelineOps.repairBandIndex(spark, dir)
-    assert(!PipelineOps.indexNeedsRepair(spark, dir))
-    assert(probe() == before, "post-crash repair must restore the exact index")
+    // probing an index that already holds the incoming docs emits no
+    // jaccard-1.0 self-pairs (the doc_a =!= doc_b guard): without it the
+    // bucket-min doc 0 would star to itself
+    val selfPairs = PipelineOps.minhashDedupIncremental(indexed, idxDir, 0.3)
+      .filter(col("doc_a") === col("doc_b")).count()
+    assert(selfPairs === 0L, "self-pairs leaked through the incremental probe")
   }
 
   test("incremental minhash == full join restricted to cross-set pairs") {
@@ -534,27 +474,6 @@ class PipelineNewOpsSpec extends AnyFunSuite {
     rows.filter(_.getLong(0) % 10 == 0).foreach { r =>
       assert(r.getDouble(3) < 1.0 && r.getLong(4) > 0)
     }
-  }
-
-  test("writeShards: one file per shard directory, readback preserves rows") {
-    val out = java.nio.file.Files.createTempDirectory("shards").toString
-    val packed = q("doc_pack")
-      .join(PipelineOps.docs(spark, sfDir).select(col("doc_id"), col("text")), "doc_id")
-    PipelineOps.writeShards(packed, out)
-    val dirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("shard_id="))
-    assert(dirs.nonEmpty)
-    dirs.foreach { d =>
-      val parts = d.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(parts.length == 1, s"${d.getName} should hold exactly one file, got ${parts.length}")
-    }
-    val back = spark.read.parquet(out)
-    assert(back.count() == packed.count())
-    // shard partition values survive the round trip
-    val expect = packed.groupBy("shard_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = back.groupBy("shard_id").count().collect()
-      .map(r => r.getAs[Number]("shard_id").longValue() -> r.getLong(1)).toMap
-    assert(got == expect)
   }
 
   test("doc_shuffle: shard positions are contiguous 1..n, order is deterministic") {

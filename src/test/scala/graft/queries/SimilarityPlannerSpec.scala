@@ -54,7 +54,9 @@ class SimilarityPlannerSpec extends AnyFunSuite {
   }
 
   test("prefix join equals the count-join on the dense corpus too") {
-    assert(collectPairs(PipelineOps.prefixJaccardJoin(dense, 0.25)) ===
+    val prefix = PipelineOps.verifyPairs(dense,
+      PipelineOps.pairCandidates(PipelineOps.prefixIndex(dense, 0.25)), 0.25)
+    assert(collectPairs(prefix) ===
       collectPairs(PipelineOps.ngramJaccardJoin(dense, 0.25, maxCandidatePairs = None)))
   }
 

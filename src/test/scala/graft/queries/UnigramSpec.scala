@@ -115,39 +115,6 @@ class UnigramSpec extends AnyFunSuite {
     (vocab.filter(_._2 > 0), segs)
   }
 
-  test("unigram save/load round-trips the model; serve-time OOV encode agrees") {
-    import org.apache.spark.sql.functions.col
-    val model = PipelineOps.unigramTrain(
-      graft.Tables.t(spark, sfDir, "documents"))
-    val dir = java.nio.file.Files.createTempDirectory("ugm").toString + "/model"
-    PipelineOps.unigramSave(spark, model, dir)
-    val (vocab2, seg2) = PipelineOps.unigramLoad(spark, dir)
-    assert(vocab2.toMap == model._1.toMap)
-    assert(seg2.count() == model._2.count())
-    // serve-time re-encode of EVERY training word must reproduce the
-    // stored segmentation exactly — guaranteed since the trainer's final
-    // pass segments under the same final-count scores the serve path
-    // derives (round-12 advice retired the fixture-luck caveat here)
-    import spark.implicits._
-    val trained = model._2.select(col("w"), col("pieces")).collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    val sample = trained.keys.toSeq
-    val served = PipelineOps.unigramEncodeWords(sample.toDF("word"), vocab2)
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    sample.foreach(w => assert(served(w) == trained(w), s"word $w"))
-    // an UNSEEN word built from covered characters segments fine
-    val unseen = sample.head.reverse + sample.head
-    val got = PipelineOps.unigramEncodeWords(Seq(unseen).toDF("word"), vocab2)
-      .collect().head.getSeq[String](1)
-    assert(got.mkString("") == unseen.take(16))
-    // a character outside the corpus-closed vocabulary fails loudly
-    // (Spark wraps the executor-side IllegalArgumentException)
-    intercept[Exception] {
-      PipelineOps.unigramEncodeWords(Seq("§§").toDF("word"), vocab2)
-        .collect()
-    }
-  }
-
   test("distributed trainer == independent driver replica on the real corpus") {
     val words = graft.Tables.t(spark, sfDir, "documents")
       .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("w"))

@@ -105,102 +105,6 @@ class DeltaWriterSpec extends SparkSpec {
     assert(rows(readBack(dir)) == Set(1L -> "a", 2L -> "b"))
   }
 
-  test("streaming sink: micro-batches append exactly-once through the ledger") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = newDir()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = DeltaWriter.streamSink(mem.toDF().toDF("id", "name"), dir, "streamA")
-      .option("checkpointLocation", Files.createTempDirectory("dw_ck").toString)
-      .start()
-    try {
-      mem.addData((1L, "a"), (2L, "b"))
-      q.processAllAvailable()
-      mem.addData((3L, "c"))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(rows(readBack(dir)) == Set(1L -> "a", 2L -> "b", 3L -> "c"))
-    // the ledger recorded the batch ids, so a manual replay of batch 0's
-    // content with its txn is a no-op
-    val before = readBack(dir).count()
-    DeltaWriter.write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), dir,
-      txn = Some(("streamA", 0L)))
-    assert(readBack(dir).count() == before)
-  }
-
-  test("streamSink compactEvery bin-packs between micro-batches without losing rows") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = newDir()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = DeltaWriter.streamSink(mem.toDF().toDF("id", "name"), dir, "cpStream",
-      compactEvery = Some(2), targetFileBytes = 1L << 20)
-      .option("checkpointLocation", Files.createTempDirectory("dw_cpe").toString)
-      .start()
-    try {
-      (0 until 6).foreach { i =>
-        mem.addData((i.toLong, s"b$i"))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // contents exactly-once through appends AND the inline compactions
-    assert(readBack(dir).select("id").collect().map(_.getLong(0)).toSet ==
-      (0L until 6L).toSet)
-    // compactions ran: far fewer live files than batches
-    val live = DeltaLoader.snapshot(spark, dir).files.size
-    assert(live < 6, s"$live live files — compaction never engaged")
-    // the log shows OPTIMIZE commits interleaved with the appends
-    val ops = new java.io.File(dir + "/_delta_log").listFiles()
-      .filter(_.getName.endsWith(".json")).sortBy(_.getName)
-      .map(f => Files.readString(f.toPath))
-      .count(_.contains("\"operation\":\"OPTIMIZE\""))
-    assert(ops >= 2, s"$ops OPTIMIZE commits")
-  }
-
-  test("streamSink full maintenance: bounded data files AND bounded log, exactly-once") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = newDir()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    // aggressive knobs: every 2nd batch compacts, retires log, vacuums —
-    // a month-long sink's behavior compressed into 8 batches
-    val q = DeltaWriter.streamSink(mem.toDF().toDF("id", "name"), dir, "maintStream",
-      compactEvery = Some(2), targetFileBytes = 1L << 20,
-      cleanupLogEvery = Some(2), logRetentionMs = 0L,
-      vacuumEvery = Some(2), vacuumRetentionMs = 0L)
-      .option("checkpointLocation", Files.createTempDirectory("dw_maint").toString)
-      .start()
-    try {
-      (0 until 8).foreach { i =>
-        mem.addData((i.toLong, s"b$i"))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // exactly-once contents through appends + all three maintenance legs
-    assert(readBack(dir).select("id").collect().map(_.getLong(0)).toSet ==
-      (0L until 8L).toSet)
-    // bounded live set (compaction engaged)
-    val live = DeltaLoader.snapshot(spark, dir).files.size
-    assert(live < 6, s"$live live files — compaction never engaged")
-    // bounded LOG: ~20 commits happened (appends + optimizes + cleanup
-    // checkpoints); retention-zero cleanup keeps only the newest few
-    val logFiles = new java.io.File(dir + "/_delta_log").listFiles()
-      .map(_.getName).filterNot(_.startsWith("."))
-    assert(logFiles.count(_.endsWith(".json")) <= 6,
-      s"log not bounded: ${logFiles.sorted.mkString(",")}")
-    // bounded STORAGE: vacuum reclaimed compacted-away originals — the
-    // on-disk parquet census stays near the live count (the newest
-    // compaction's removals may be one retention tick short of reclaim)
-    val onDisk = new java.io.File(dir).listFiles()
-      .count(f => !f.isDirectory && f.getName.endsWith(".parquet"))
-    assert(onDisk <= live + 3, s"$onDisk parquet on disk vs $live live")
-    // the ledger survived all of it: an old-batch redelivery is a no-op
-    val before = readBack(dir).count()
-    DeltaWriter.write(Seq((0L, "b0")).toDF("id", "name"), dir,
-      txn = Some(("maintStream", 0L)))
-    assert(readBack(dir).count() == before)
-  }
-
   test("pipeline integration: curated corpus lands as a queryable Delta table") {
     // the sink the writer exists for — doc_curate output becomes a
     // transactional table other engines (delta-rs, the reference) can read

@@ -184,95 +184,6 @@ class IcebergWriterSpec extends SparkSpec with IcebergFixtures {
     assert(readBack(dir).schema.fieldNames.toSeq == Seq("label", "n"))
   }
 
-  test("streaming sink appends exactly-once through the summary ledger") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = newDir()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = IcebergWriter.streamSink(mem.toDF().toDF("id", "name"), dir, "streamA")
-      .option("checkpointLocation", Files.createTempDirectory("iw_ck").toString)
-      .start()
-    try {
-      mem.addData((1L, "a"), (2L, "b"))
-      q.processAllAvailable()
-      mem.addData((3L, "c"))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(idName(readBack(dir)) == Set(1L -> "a", 2L -> "b", 3L -> "c"))
-    val before = readBack(dir).count()
-    IcebergWriter.write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), dir,
-      txn = Some(("streamA", 0L)))
-    assert(readBack(dir).count() == before)
-    // compactEvery: inline bin-packing between micro-batches
-    val dir2 = newDir()
-    val mem2 = MemoryStream[(Long, String)]
-    val q2 = IcebergWriter.streamSink(mem2.toDF().toDF("id", "name"), dir2,
-      "streamB", compactEvery = Some(2), targetFileBytes = 1L << 20)
-      .option("checkpointLocation", Files.createTempDirectory("iw_ck2").toString)
-      .start()
-    try {
-      (0 until 6).foreach { i =>
-        mem2.addData((i.toLong, s"b$i"))
-        q2.processAllAvailable()
-      }
-    } finally q2.stop()
-    assert(readBack(dir2).select("id").collect().map(_.getLong(0)).toSet ==
-      (0L until 6L).toSet)
-    assert(readBack(dir2).inputFiles.length < 6,
-      "compaction never engaged on the stream")
-  }
-
-  test("streamSink full maintenance: bounded files, snapshots, metadata; ledger survives") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = newDir()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    // aggressive knobs: a month-long sink's maintenance compressed into
-    // 8 batches — compact, expire, orphan-sweep, metadata-trim inline
-    val q = IcebergWriter.streamSink(mem.toDF().toDF("id", "name"), dir, "maintIce",
-      compactEvery = Some(2), targetFileBytes = 1L << 20,
-      expireEvery = Some(2), expireOlderThanMs = 0L,
-      orphanReclaimEvery = Some(2), orphanOlderThanMs = 0L,
-      cleanupMetadataEvery = Some(2), keepMetadata = 3)
-      .option("checkpointLocation", Files.createTempDirectory("iw_maint").toString)
-      .start()
-    try {
-      (0 until 8).foreach { i =>
-        mem.addData((i.toLong, s"b$i"))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // exactly-once contents through appends + all four maintenance legs
-    assert(readBack(dir).select("id").collect().map(_.getLong(0)).toSet ==
-      (0L until 8L).toSet)
-    // bounded live set (compaction engaged)
-    assert(readBack(dir).inputFiles.length < 6)
-    // bounded SNAPSHOT history (expiry engaged: only the young survive)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val hint = Files.readString(java.nio.file.Path.of(
-      dir + "/metadata/version-hint.text")).trim
-    val meta = mapper.readTree(Files.readString(java.nio.file.Path.of(
-      dir + s"/metadata/v$hint.metadata.json")))
-    assert(meta.get("snapshots").size() <= 4,
-      s"${meta.get("snapshots").size()} snapshots — expiry never engaged")
-    // bounded METADATA versions (cleanup engaged; later batches add a few)
-    val metaFiles = new java.io.File(dir + "/metadata").listFiles()
-      .map(_.getName).filter(_.endsWith(".metadata.json"))
-    assert(metaFiles.length <= 10,
-      s"metadata not bounded: ${metaFiles.length} versions")
-    // bounded STORAGE: compacted-away originals reclaimed by expire+orphan
-    assert(dataParquetFiles(dir).size <= readBack(dir).inputFiles.length + 3)
-    // the ledger survived expiry (folded into properties): old-batch
-    // redelivery is a no-op, a newer batch still commits
-    val before = readBack(dir).count()
-    IcebergWriter.write(Seq((0L, "b0")).toDF("id", "name"), dir,
-      txn = Some(("maintIce", 0L)))
-    assert(readBack(dir).count() == before)
-    IcebergWriter.write(Seq((99L, "fresh")).toDF("id", "name"), dir,
-      txn = Some(("maintIce", 99L)))
-    assert(readBack(dir).count() == before + 1)
-  }
-
   test("expireSnapshots folds dropped ledger summaries into table properties") {
     val dir = newDir()
     IcebergWriter.write(Seq((1L, "a")).toDF("id", "name"), dir,

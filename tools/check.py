@@ -4,8 +4,13 @@ against DuckDB oracles on the same parquet tables and diff values.
 
 Usage: python tools/check.py <sfDir> <verifyOutDir> [receiptJsonPath]
 
+Each query is timed in two parts: the DuckDB oracle execution and the
+Python row compare. The ten slowest queries are printed after the
+pass/fail total.
+
 When a third argument is given, a machine-readable receipt of the run
-(per-query pass/fail + reasons, versions, totals) is written there —
+(per-query pass/fail + reasons, per-query seconds, versions, totals) is
+written there —
 committed per round so the round stays signed even if the driver's own
 CORRECTNESS artifact comes back empty (round-18: the gate passed but the
 artifact was `{}`).
@@ -13,6 +18,7 @@ artifact was `{}`).
 import json
 import math
 import sys
+import time
 
 import duckdb
 import pyarrow.parquet as pq
@@ -29,6 +35,36 @@ def norm(v):
     return v
 
 
+def diff(got, exp):
+    """None when the Spark result equals the oracle's, else the reason."""
+    gcols, ecols = sorted(got.column_names), sorted(exp.column_names)
+    if gcols != ecols:
+        return f"columns {gcols} != {ecols}"
+    g = got.select(gcols).to_pylist()
+    e = exp.select(ecols).to_pylist()
+    if len(g) != len(e):
+        return f"rows {len(g)} != {len(e)}"
+    bad = None
+    maxdiff = 0.0
+    for i, (rg, re_) in enumerate(zip(g, e)):
+        for c in gcols:
+            a, b = norm(rg[c]), norm(re_[c])
+            if a == b:
+                continue
+            if isinstance(a, float) and isinstance(b, float):
+                d = abs(a - b)
+                maxdiff = max(maxdiff, d)
+                if d > 0:
+                    bad = bad or (i, c, a, b)
+            else:
+                bad = bad or (i, c, a, b)
+    if bad:
+        i, c, a, b = bad
+        exact = "EXACT-MISMATCH" if maxdiff == 0 else f"maxdiff={maxdiff:.3e}"
+        return f"row {i} col {c}: {a!r} != {b!r} ({exact})"
+    return None
+
+
 def main(sf_dir, out_dir, receipt_path=None):
     # version stamp: oracle semantics can shift across duckdb releases and
     # Spark float formatting across JDKs — make every gate run attributable
@@ -36,6 +72,8 @@ def main(sf_dir, out_dir, receipt_path=None):
     versions = f"duckdb={duckdb.__version__} python={platform.python_version()}"
     print(f"versions: {versions}")
     results = {}
+    # per query: seconds in the DuckDB oracle and in the Python row compare
+    seconds = {}
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -50,6 +88,7 @@ def main(sf_dir, out_dir, receipt_path=None):
             n_fail += 1
             continue
         got = pq.read_table(files[0])
+        t0 = time.perf_counter()
         try:
             exp = con.sql(sql).arrow()
         except Exception as e:
@@ -57,49 +96,28 @@ def main(sf_dir, out_dir, receipt_path=None):
             results[name] = f"FAIL: oracle error {e}"
             n_fail += 1
             continue
-        gcols, ecols = sorted(got.column_names), sorted(exp.column_names)
-        if gcols != ecols:
-            print(f"FAIL {name}: columns {gcols} != {ecols}")
-            results[name] = f"FAIL: columns {gcols} != {ecols}"
-            n_fail += 1
-            continue
-        g = got.select(gcols).to_pylist()
-        e = exp.select(ecols).to_pylist()
-        if len(g) != len(e):
-            print(f"FAIL {name}: rows {len(g)} != {len(e)}")
-            results[name] = f"FAIL: rows {len(g)} != {len(e)}"
-            n_fail += 1
-            continue
-        bad = None
-        maxdiff = 0.0
-        for i, (rg, re_) in enumerate(zip(g, e)):
-            for c in gcols:
-                a, b = norm(rg[c]), norm(re_[c])
-                if a == b:
-                    continue
-                if isinstance(a, float) and isinstance(b, float):
-                    d = abs(a - b)
-                    maxdiff = max(maxdiff, d)
-                    if d > 0:
-                        bad = bad or (i, c, a, b)
-                else:
-                    bad = bad or (i, c, a, b)
-        if bad:
-            i, c, a, b = bad
-            exact = "EXACT-MISMATCH" if maxdiff == 0 else f"maxdiff={maxdiff:.3e}"
-            print(f"FAIL {name}: row {i} col {c}: {a!r} != {b!r} ({exact})")
-            results[name] = f"FAIL: row {i} col {c}: {a!r} != {b!r} ({exact})"
+        t1 = time.perf_counter()
+        reason = diff(got, exp)
+        seconds[name] = {"duckdb": round(t1 - t0, 3),
+                         "compare": round(time.perf_counter() - t1, 3)}
+        if reason:
+            print(f"FAIL {name}: {reason}")
+            results[name] = f"FAIL: {reason}"
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(g)} rows)")
-            results[name] = f"PASS ({len(g)} rows)"
+            print(f"PASS {name} ({exp.num_rows} rows)")
+            results[name] = f"PASS ({exp.num_rows} rows)"
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
+    slowest = sorted(seconds.items(), key=lambda kv: -sum(kv[1].values()))[:10]
+    print("slowest (duckdb s + compare s):")
+    for name, s in slowest:
+        print(f"  {name}: {s['duckdb']:.3f} + {s['compare']:.3f}")
     if receipt_path:
-        import time
         json.dump({"versions": versions, "sf_dir": sf_dir,
                    "utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                   "pass": n_pass, "fail": n_fail, "results": results},
+                   "pass": n_pass, "fail": n_fail, "results": results,
+                   "seconds": seconds},
                   open(receipt_path, "w"), indent=1, sort_keys=True)
         print(f"receipt -> {receipt_path}")
     return 1 if n_fail else 0
