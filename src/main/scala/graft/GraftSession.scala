@@ -22,6 +22,11 @@ object GraftSession {
       // available to every SQL frontend via the extension point
       .withExtensions(graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
+      // every job broadcasts its task binary in chunks of this size, whatever
+      // the binary's size: Spark's 4m chunk is a humongous allocation for G1
+      // on a heap of up to 2 GB (1 MB regions), and each such allocation can
+      // start a concurrent cycle; 256k stays under half a region
+      .config("spark.broadcast.blockSize", "256k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")

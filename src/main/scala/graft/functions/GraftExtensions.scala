@@ -88,5 +88,8 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions = graft.plans.HoistLiterals
     })
+    // a query over a one-split file scan runs as one stage: AQE drops the
+    // exchanges EnsureRequirements planned over it (OneSplitStages scaladoc)
+    ext.injectQueryStagePrepRule(_ => graft.plans.OneSplitStages)
   }
 }
